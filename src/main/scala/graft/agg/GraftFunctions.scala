@@ -1,5 +1,6 @@
 package graft.agg
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{Cast, Expression}
 import org.apache.spark.sql.types.{DoubleType, LongType, StringType}
@@ -86,6 +87,11 @@ object GraftFunctions {
     col(KmvUnionEstimate(ex(a), ex(b)))
   def kmv_shared_in_union(a: Column, b: Column): Column =
     col(KmvSharedInUnion(ex(a), ex(b)))
+
+  /** a serialized sketch of `bytes` bytes held by a broadcast handle
+    * ([[SketchRef]]): probes read it like a sketch column, and plans
+    * print `sketch#<id>(<n> bytes)` instead of the blob */
+  def sketch_ref(bc: Broadcast[Array[Byte]], bytes: Int): Column = col(SketchRef(bc, bytes))
 
   def bloom_contains(sketch: Column, key: Column): Column = col(BloomContains(ex(sketch), ex(key.cast("string"))))
   def sbf_contains(sketch: Column, key: Column): Column = col(SbfContains(ex(sketch), ex(key.cast("string"))))

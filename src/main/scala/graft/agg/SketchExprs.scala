@@ -1,10 +1,37 @@
 package graft.agg
 
 import graft.sketch._
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, LeafExpression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
+
+/**
+ * A serialized sketch held by a broadcast handle: the leaf a probe reads
+ * its sketch from when the sketch is a per-call constant (the catalog's
+ * snapshots). A `Literal` of the same bytes would make every plan
+ * description print the blob as hex (~24M characters for a 6 MB filter,
+ * re-formatted at query start and on each AQE re-plan, and retained by
+ * the SQL status store) and put a copy in every task binary. This leaf
+ * prints as `sketch#<id>(<n> bytes)` and its tasks read the executor's
+ * one cached copy. Not foldable, so constant folding never turns it back
+ * into a literal.
+ */
+case class SketchRef(bc: Broadcast[Array[Byte]], bytes: Int) extends LeafExpression {
+  override def dataType: DataType = BinaryType
+  override def nullable: Boolean = false
+  override def eval(input: InternalRow): Any = bc.value
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("sketchBc", bc, classOf[Broadcast[_]].getName)
+    ev.copy(code = code"final byte[] ${ev.value} = (byte[]) $ref.value();", isNull = FalseLiteral)
+  }
+
+  override def toString: String = s"sketch#${bc.id}($bytes bytes)"
+}
 
 /**
  * Scalar probe/inspect expressions over serialized sketches — the
@@ -14,7 +41,8 @@ import org.apache.spark.unsafe.types.UTF8String
  * Deserialization of our blobs is a header parse that WRAPS the byte
  * array (no bitmap copy), so per-row probe cost is hashing + k bit
  * reads. A same-reference memo still short-circuits the wrap when the
- * engine hands us the identical array object (literals, cached rows).
+ * engine hands us the identical array object (literals, broadcast
+ * handles, cached rows).
  */
 trait SketchMemo[S <: AnyRef] {
   @transient private var lastRef: AnyRef = _

@@ -2,7 +2,7 @@ package graft.catalog
 
 import graft.agg.GraftFunctions._
 import graft.sketch.ScalableBloom
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Path, Paths}
 import java.nio.charset.StandardCharsets.UTF_8
@@ -305,12 +305,9 @@ class SketchCatalog(
         val beforeBlob = sk.serialize()
         val keyCol = keys.columns.head
         val keyed = keys.select(col(keyCol).as("key")).na.drop()
-        // contains-check against current state first, like sbf_add.
-        // (The blob rides the plan as a Literal — Spark broadcasts the
-        // task binary once per stage, so a catalog-sized blob ships
-        // once per executor, not per task.)
+        // contains-check against the before-state, like sbf_add
         val result = keyed.select(col("key"),
-          (!sbf_contains(lit(beforeBlob), col("key"))).as("added"))
+          (!sbf_contains(snapshotRef(beforeBlob), col("key"))).as("added"))
         // ONE distributed pass computes both the delta sketch (null
         // keys are skipped by the aggregate) and the total key count
         val row = result.agg(
@@ -365,7 +362,7 @@ class SketchCatalog(
         val blob = faultIn(e).serialize()
         val keyCol = keys.columns.head
         val res = keys.select(col(keyCol),
-          sbf_contains(lit(blob), col(keyCol)).as("present"))
+          sbf_contains(snapshotRef(blob), col(keyCol)).as("present"))
         // (hits, total) in one aggregation pass
         val row = res.agg(
           sum(when(col("present"), 1L).otherwise(0L)).as("hits"),
@@ -384,8 +381,8 @@ class SketchCatalog(
   // their filters in ONE distributed job. Shape matters, and it is
   // picked by the number of filters the probe references:
   //   - few filters (<= multiProbeBranchBound): a UNION of per-filter
-  //     probes, each with its own sketch as a plan LITERAL (ships once
-  //     per executor in the task binary; codegen'd sbf_contains with a
+  //     probes, each reading its own snapshot through a broadcast
+  //     handle (snapshotRef; codegen'd sbf_contains with a
   //     per-expression memo) — joining against a sketch COLUMN would
   //     re-copy the blob per row (UnsafeRow.getBinary) and thrash the
   //     probe memo across interleaved filters. Each branch re-scans
@@ -404,7 +401,7 @@ class SketchCatalog(
     val registryNames = names
     // only fault in the filters the probe actually references: a
     // catalog-wide fault-in would defeat the cold sweep (every filter
-    // marked hot + paged in) and embed every blob in the plan. The
+    // marked hot + paged in) and serialize and ship every blob. The
     // distinct-names job is bounded by |catalog| via the isin filter.
     val wanted: Set[String] =
       if (registryNames.isEmpty) Set.empty
@@ -443,7 +440,7 @@ class SketchCatalog(
       val branches = blobs.map { case (n, blob) =>
         keyed.filter(col("name") === n)
           .select(col("name"), col("key"),
-            sbf_contains(lit(blob), col("key")).as("present"))
+            sbf_contains(snapshotRef(blob), col("key")).as("present"))
       }
       // persisted: the counters pass and the caller's consumption
       // would otherwise each re-run every probe branch;
@@ -499,6 +496,18 @@ class SketchCatalog(
       (chunks.toSeq :+ unknownBranch(knownNames.toSet)).reduce(_ union _)
     }
   }
+
+  /** A serialized snapshot as the plan sees it: a [[graft.agg.SketchRef]]
+    * over a broadcast of `blob`, never a literal (a literal prints the
+    * blob into every plan description and copies it into every task
+    * binary). The copy is taken under the caller's entry lock, so the
+    * lazily consumed result keeps answering from the state at call time
+    * whatever later sets do to the live sketch. The broadcast is not
+    * destroyed here: the caller may consume the returned DataFrame at
+    * any later time. Spark's ContextCleaner removes it once the plans
+    * that reference it are unreachable. */
+  private def snapshotRef(blob: Array[Byte]): Column =
+    sketch_ref(spark.sparkContext.broadcast(blob), blob.length)
 
   /** Observability for the last `checkKeysMulti` plan: how many probe
     * chunks ran and the largest chunk's serialized blob bytes (the
@@ -710,7 +719,7 @@ class SketchCatalog(
 object SketchCatalog {
 
   /** Above this many referenced filters, `checkKeysMulti` switches
-    * from the union-of-literal-probes plan (O(branches) re-scans of
+    * from the union of per-filter probes (O(branches) re-scans of
     * the pair set) to the single-scan broadcast-map shape. 16 keeps
     * small probes on the codegen'd expression path while bounding the
     * worst case at catalog scale. */

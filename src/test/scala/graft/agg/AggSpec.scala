@@ -76,6 +76,46 @@ class AggSpec extends AnyFunSuite {
     assert(fn == 0)
   }
 
+  private def withConf[A](kv: (String, String)*)(f: => A): A = {
+    val old = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kv.foreach { case (k, v) => spark.conf.set(k, v) }
+    try f finally old.foreach { case (k, o) => o.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+  }
+
+  test("sketch_ref probe: generated and interpreted code give the same answers, null key answers null") {
+    val sbf = graft.sketch.ScalableBloom.create(20000L, 1e-4).materialize()
+    (0 until 5000).foreach(i => sbf.add(s"in$i".getBytes(UTF_8)))
+    val blob = sbf.serialize()
+    val ref = sketch_ref(spark.sparkContext.broadcast(blob), blob.length)
+    // range, not a local Seq: a projection over a local relation is
+    // evaluated on the driver by the optimizer and skips both paths
+    def probe(): (Map[Long, java.lang.Boolean], org.apache.spark.sql.execution.SparkPlan) = {
+      val df = spark.range(0, 10000, 1, 4)
+        .select(col("id"), when(col("id") % 97 === 0, lit(null).cast("string"))
+          .when(col("id") < 5000, concat(lit("in"), col("id")))
+          .otherwise(concat(lit("out"), col("id"))).as("k"))
+        .select(col("id"), sbf_contains(ref, col("k")).as("p"))
+      (df.collect().map(r => r.getLong(0) -> (if (r.isNullAt(1)) null else java.lang.Boolean.valueOf(r.getBoolean(1)))).toMap,
+        df.queryExecution.executedPlan)
+    }
+    val (generated, genPlan) = withConf(
+      "spark.sql.codegen.wholeStage" -> "true",
+      "spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY",
+      "spark.sql.codegen.fallback" -> "false")(probe())
+    assert(genPlan.exists(_.isInstanceOf[org.apache.spark.sql.execution.WholeStageCodegenExec]),
+      s"probe did not run in whole-stage codegen:\n$genPlan")
+    val (interpreted, _) = withConf(
+      "spark.sql.codegen.wholeStage" -> "false",
+      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")(probe())
+    val expected: Map[Long, java.lang.Boolean] = (0L until 10000L).map { i =>
+      i -> (if (i % 97 == 0) null
+            else java.lang.Boolean.valueOf(sbf.contains(s"${if (i < 5000) "in" else "out"}$i".getBytes(UTF_8))))
+    }.toMap
+    assert(generated == expected)
+    assert(interpreted == expected)
+    assert(expected.count { case (i, p) => i < 5000 && p != null && p } == 5000 - 52, "every inserted key present")
+  }
+
   test("sbf_agg grows under distributed aggregation and keeps membership") {
     import spark.implicits._
     val df = (0 until 30000).map(i => s"g$i").toDF("k").repartition(6)

@@ -1,6 +1,6 @@
 package graft.catalog
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
 
@@ -126,6 +126,54 @@ class CatalogSpec extends AnyFunSuite {
     val info = cat.info("mem1").toOption.get.head()
     assert(info.getAs[Int]("in_memory") == 1 && info.getAs[Long]("page_outs") == 0)
     assert(cat.drop("mem1") == "Done")
+  }
+
+  test("lazy results answer from the snapshot taken at call time, not the live sketch") {
+    import spark.implicits._
+    val c = freshCatalog()
+    c.create("snap")
+    c.setKeys("snap", Seq("old1", "old2").toDF("k")).toOption.get.collect()
+    val check = c.checkKeys("snap", Seq("old1", "new1", "new2").toDF("k")).toOption.get
+    val firstSet = c.setKeys("snap", Seq("old1", "mid1").toDF("k")).toOption.get
+    // a later set puts mid1 and the new keys into the live sketch
+    c.setKeys("snap", Seq("new1", "new2", "mid1").toDF("k")).toOption.get.collect()
+    assert(c.checkKeyLocal("snap", "new1") == Right(true))
+    def answers(df: DataFrame) = df.collect().map(r => r.getString(0) -> r.getBoolean(1)).toMap
+    assert(answers(check) == Map("old1" -> true, "new1" -> false, "new2" -> false))
+    assert(answers(firstSet) == Map("old1" -> false, "mid1" -> true)) // added vs its own before-state
+  }
+
+  test("probe plans carry a sketch handle, not the serialized blob") {
+    import org.apache.spark.sql.execution.FormattedMode
+    import org.apache.spark.sql.functions._
+    val c = freshCatalog()
+    Seq("wide1", "wide2").foreach(n => assert(c.create(n, capacity = 1000000) == "Done"))
+    val store = spark.sharedState.statusStore
+    def retainedPlanChars(): Long = {
+      org.apache.spark.ListenerBusDrain(spark.sparkContext)
+      store.executionsList().iterator.map(_.physicalPlanDescription.length.toLong).sum
+    }
+    // range, not a local Seq: the optimizer folds a projection over a
+    // local relation into the relation, probe and all
+    val ids = spark.range(0, 300, 1, 2)
+    val keys = ids.select(concat(lit("k"), col("id")).as("k"))
+    val pairs = ids.select(element_at(array(lit("wide1"), lit("wide2"), lit("nope")),
+      (col("id") % 3 + 1).cast("int")).as("name"), concat(lit("k"), col("id")).as("key"))
+    val calls: Seq[(String, () => DataFrame)] = Seq(
+      "setKeys" -> (() => c.setKeys("wide1", keys).toOption.get),
+      "checkKeys" -> (() => c.checkKeys("wide1", keys).toOption.get),
+      "checkKeysMulti" -> (() => c.checkKeysMulti(pairs)))
+    calls.foreach { case (call, run) =>
+      val before = retainedPlanChars()
+      val res = run()
+      val plan = res.queryExecution.explainString(FormattedMode)
+      assert(plan.length < 16 * 1024, s"$call: formatted plan is ${plan.length} chars")
+      assert(plan.contains("sketch#"), s"$call: no sketch handle in the plan:\n$plan")
+      res.collect()
+      val added = retainedPlanChars() - before
+      assert(added < 64 * 1024, s"$call: $added plan-description chars retained")
+      res.unpersist()
+    }
   }
 
   test("list with prefix, lexicographic order, drop removes files") {
