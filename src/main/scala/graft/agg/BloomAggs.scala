@@ -17,17 +17,30 @@ import org.apache.spark.unsafe.types.UTF8String
  * architecture that scales to 10^12 rows because buffer size is bounded
  * by sketch params, never by data volume.
  *
- * Keys are the UTF-8 bytes of the (string-cast) input, matching the
- * reference's ASCII wire keys, so estimates are bit-compatible with a
- * bloomd fed the same key strings.
+ * The buffer is the sketch itself. Merge and the buffer and result
+ * bytes go through the family's codec, so they are written once here.
+ * Serializable because Java serialization rebuilds a task's copy with
+ * the no-arg constructor of the first non-serializable ancestor, and
+ * this class takes the codec.
  */
-abstract class KeyedSketchAgg[T] extends TypedImperativeAggregate[T]
-    with UnaryLike[Expression] {
-
-  // the GraftFunctions facade casts the key to string; SQL builders wrap
-  // with Cast, so `child` is StringType by construction
+abstract class SketchBuildAgg[S <: AnyRef](codec: SketchCodec[S]) extends TypedImperativeAggregate[S]
+    with Serializable {
   override def nullable: Boolean = false
   override def dataType: DataType = BinaryType
+
+  final override def merge(a: S, b: S): S = codec.merge(a, b)
+  final override def eval(buf: S): Any = codec.serialize(buf)
+  final override def serialize(buf: S): Array[Byte] = codec.serialize(buf)
+  final override def deserialize(bytes: Array[Byte]): S = codec.deserialize(bytes)
+}
+
+/** Sketch aggregates over one string key per row. The GraftFunctions
+  * facade casts the key to string; SQL builders wrap with Cast, so
+  * `child` is StringType by construction. Keys are the UTF-8 bytes of
+  * the input, matching the reference's ASCII wire keys, so estimates
+  * are bit-compatible with a bloomd fed the same key strings. */
+abstract class KeyedSketchAgg[T <: AnyRef](codec: SketchCodec[T]) extends SketchBuildAgg[T](codec)
+    with UnaryLike[Expression] {
 
   protected def updateKey(buffer: T, key: Array[Byte], len: Int): Unit
 
@@ -57,16 +70,12 @@ case class BloomAgg(
     capacity: Long,
     fpProb: Double,
     mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0) extends KeyedSketchAgg[BloomFilter] {
+    inputAggBufferOffset: Int = 0) extends KeyedSketchAgg(BloomFilter) {
 
   private val params = BloomParams.forCapacity(capacity, fpProb)
 
   override def createAggregationBuffer(): BloomFilter = BloomFilter.create(params)
   override protected def updateKey(buf: BloomFilter, key: Array[Byte], len: Int): Unit = buf.addKey(key, 0, len)
-  override def merge(a: BloomFilter, b: BloomFilter): BloomFilter = a.orInPlace(b)
-  override def eval(buf: BloomFilter): Any = buf.serialize()
-  override def serialize(buf: BloomFilter): Array[Byte] = buf.serialize()
-  override def deserialize(bytes: Array[Byte]): BloomFilter = BloomFilter.deserialize(bytes)
 
   override def withNewMutableAggBufferOffset(n: Int): BloomAgg = copy(mutableAggBufferOffset = n)
   override def withNewInputAggBufferOffset(n: Int): BloomAgg = copy(inputAggBufferOffset = n)
@@ -82,15 +91,11 @@ case class SbfAgg(
     scaleSize: Int,
     probReduction: Double,
     mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0) extends KeyedSketchAgg[ScalableBloom] {
+    inputAggBufferOffset: Int = 0) extends KeyedSketchAgg(ScalableBloom) {
 
   override def createAggregationBuffer(): ScalableBloom =
     ScalableBloom.create(initialCapacity, fpProb, scaleSize, probReduction)
   override protected def updateKey(buf: ScalableBloom, key: Array[Byte], len: Int): Unit = buf.add(key, 0, len)
-  override def merge(a: ScalableBloom, b: ScalableBloom): ScalableBloom = a.mergeInPlace(b)
-  override def eval(buf: ScalableBloom): Any = buf.serialize()
-  override def serialize(buf: ScalableBloom): Array[Byte] = buf.serialize()
-  override def deserialize(bytes: Array[Byte]): ScalableBloom = ScalableBloom.deserialize(bytes)
 
   override def withNewMutableAggBufferOffset(n: Int): SbfAgg = copy(mutableAggBufferOffset = n)
   override def withNewInputAggBufferOffset(n: Int): SbfAgg = copy(inputAggBufferOffset = n)
@@ -121,15 +126,11 @@ case class LbfAgg(
     fpProb: Double,
     maxCount: Long = 5L,
     mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0) extends KeyedSketchAgg[LayeredBloom] {
+    inputAggBufferOffset: Int = 0) extends KeyedSketchAgg(LayeredBloom) {
 
   override def createAggregationBuffer(): LayeredBloom = LayeredBloom.create(capacity, fpProb)
   override protected def updateKey(buf: LayeredBloom, key: Array[Byte], len: Int): Unit =
     buf.addCapped(key, 0, len, maxCount) // one hash pass: count + cap + insert
-  override def merge(a: LayeredBloom, b: LayeredBloom): LayeredBloom = a.mergeInPlace(b)
-  override def eval(buf: LayeredBloom): Any = buf.serialize()
-  override def serialize(buf: LayeredBloom): Array[Byte] = buf.serialize()
-  override def deserialize(bytes: Array[Byte]): LayeredBloom = LayeredBloom.deserialize(bytes)
 
   override def withNewMutableAggBufferOffset(n: Int): LbfAgg = copy(mutableAggBufferOffset = n)
   override def withNewInputAggBufferOffset(n: Int): LbfAgg = copy(inputAggBufferOffset = n)

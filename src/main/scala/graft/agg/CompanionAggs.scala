@@ -3,9 +3,7 @@ package graft.agg
 import graft.sketch._
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.trees.{BinaryLike, UnaryLike}
-import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** HLL distinct-count aggregate over string keys. */
@@ -13,14 +11,10 @@ case class HllAgg(
     child: Expression,
     precision: Int,
     mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0) extends KeyedSketchAgg[Hll] {
+    inputAggBufferOffset: Int = 0) extends KeyedSketchAgg(Hll) {
 
   override def createAggregationBuffer(): Hll = Hll.create(precision)
   override protected def updateKey(buf: Hll, key: Array[Byte], len: Int): Unit = buf.update(key, 0, len)
-  override def merge(a: Hll, b: Hll): Hll = a.merge(b)
-  override def eval(buf: Hll): Any = buf.serialize()
-  override def serialize(buf: Hll): Array[Byte] = buf.serialize()
-  override def deserialize(bytes: Array[Byte]): Hll = Hll.deserialize(bytes)
   override def withNewMutableAggBufferOffset(n: Int): HllAgg = copy(mutableAggBufferOffset = n)
   override def withNewInputAggBufferOffset(n: Int): HllAgg = copy(inputAggBufferOffset = n)
   override protected def withNewChildInternal(c: Expression): HllAgg = copy(child = c)
@@ -33,14 +27,10 @@ case class CmsAgg(
     eps: Double,
     delta: Double,
     mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0) extends KeyedSketchAgg[CountMin] {
+    inputAggBufferOffset: Int = 0) extends KeyedSketchAgg(CountMin) {
 
   override def createAggregationBuffer(): CountMin = CountMin.forGuarantee(eps, delta)
   override protected def updateKey(buf: CountMin, key: Array[Byte], len: Int): Unit = buf.update(key, 0, len, 1L)
-  override def merge(a: CountMin, b: CountMin): CountMin = a.merge(b)
-  override def eval(buf: CountMin): Any = buf.serialize()
-  override def serialize(buf: CountMin): Array[Byte] = buf.serialize()
-  override def deserialize(bytes: Array[Byte]): CountMin = CountMin.deserialize(bytes)
   override def withNewMutableAggBufferOffset(n: Int): CmsAgg = copy(mutableAggBufferOffset = n)
   override def withNewInputAggBufferOffset(n: Int): CmsAgg = copy(inputAggBufferOffset = n)
   override protected def withNewChildInternal(c: Expression): CmsAgg = copy(child = c)
@@ -56,15 +46,11 @@ case class FreqAgg(
     child: Expression,
     k: Int,
     mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0) extends KeyedSketchAgg[FrequentItems] {
+    inputAggBufferOffset: Int = 0) extends KeyedSketchAgg(FrequentItems) {
 
   override def createAggregationBuffer(): FrequentItems = FrequentItems.create(k)
   override protected def updateKey(buf: FrequentItems, key: Array[Byte], len: Int): Unit =
     buf.update(new String(key, 0, len, java.nio.charset.StandardCharsets.UTF_8))
-  override def merge(a: FrequentItems, b: FrequentItems): FrequentItems = a.merge(b)
-  override def eval(buf: FrequentItems): Any = buf.serialize()
-  override def serialize(buf: FrequentItems): Array[Byte] = buf.serialize()
-  override def deserialize(bytes: Array[Byte]): FrequentItems = FrequentItems.deserialize(bytes)
   override def withNewMutableAggBufferOffset(n: Int): FreqAgg = copy(mutableAggBufferOffset = n)
   override def withNewInputAggBufferOffset(n: Int): FreqAgg = copy(inputAggBufferOffset = n)
   override protected def withNewChildInternal(c: Expression): FreqAgg = copy(child = c)
@@ -78,15 +64,11 @@ case class KmvAgg(
     child: Expression,
     k: Int,
     mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0) extends KeyedSketchAgg[Kmv] {
+    inputAggBufferOffset: Int = 0) extends KeyedSketchAgg(Kmv) {
 
   override def createAggregationBuffer(): Kmv = Kmv.create(k)
   override protected def updateKey(buf: Kmv, key: Array[Byte], len: Int): Unit =
     buf.add(key, len)
-  override def merge(a: Kmv, b: Kmv): Kmv = a.merge(b)
-  override def eval(buf: Kmv): Any = buf.serialize()
-  override def serialize(buf: Kmv): Array[Byte] = buf.serialize()
-  override def deserialize(bytes: Array[Byte]): Kmv = Kmv.deserialize(bytes)
   override def withNewMutableAggBufferOffset(n: Int): KmvAgg = copy(mutableAggBufferOffset = n)
   override def withNewInputAggBufferOffset(n: Int): KmvAgg = copy(inputAggBufferOffset = n)
   override protected def withNewChildInternal(c: Expression): KmvAgg = copy(child = c)
@@ -94,11 +76,8 @@ case class KmvAgg(
 }
 
 /** Numeric sketch aggregates share double-input handling. */
-abstract class DoubleSketchAgg[T] extends TypedImperativeAggregate[T]
+abstract class DoubleSketchAgg[T <: AnyRef](codec: SketchCodec[T]) extends SketchBuildAgg[T](codec)
     with UnaryLike[Expression] {
-  override def nullable: Boolean = false
-  override def dataType: DataType = BinaryType
-
   protected def updateValue(buffer: T, v: Double): Unit
 
   final override def update(buffer: T, input: InternalRow): T = {
@@ -113,14 +92,10 @@ case class TDigestAgg(
     child: Expression,
     compression: Double,
     mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0) extends DoubleSketchAgg[TDigest] {
+    inputAggBufferOffset: Int = 0) extends DoubleSketchAgg(TDigest) {
 
   override def createAggregationBuffer(): TDigest = TDigest.create(compression)
   override protected def updateValue(buf: TDigest, v: Double): Unit = buf.update(v)
-  override def merge(a: TDigest, b: TDigest): TDigest = a.merge(b)
-  override def eval(buf: TDigest): Any = buf.serialize()
-  override def serialize(buf: TDigest): Array[Byte] = buf.serialize()
-  override def deserialize(bytes: Array[Byte]): TDigest = TDigest.deserialize(bytes)
   override def withNewMutableAggBufferOffset(n: Int): TDigestAgg = copy(mutableAggBufferOffset = n)
   override def withNewInputAggBufferOffset(n: Int): TDigestAgg = copy(inputAggBufferOffset = n)
   override protected def withNewChildInternal(c: Expression): TDigestAgg = copy(child = c)
@@ -132,14 +107,10 @@ case class KllAgg(
     child: Expression,
     k: Int,
     mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0) extends DoubleSketchAgg[Kll] {
+    inputAggBufferOffset: Int = 0) extends DoubleSketchAgg(Kll) {
 
   override def createAggregationBuffer(): Kll = Kll.create(k)
   override protected def updateValue(buf: Kll, v: Double): Unit = buf.update(v)
-  override def merge(a: Kll, b: Kll): Kll = a.merge(b)
-  override def eval(buf: Kll): Any = buf.serialize()
-  override def serialize(buf: Kll): Array[Byte] = buf.serialize()
-  override def deserialize(bytes: Array[Byte]): Kll = Kll.deserialize(bytes)
   override def withNewMutableAggBufferOffset(n: Int): KllAgg = copy(mutableAggBufferOffset = n)
   override def withNewInputAggBufferOffset(n: Int): KllAgg = copy(inputAggBufferOffset = n)
   override protected def withNewChildInternal(c: Expression): KllAgg = copy(child = c)
@@ -159,11 +130,8 @@ case class TopKAgg(
     right: Expression,
     k: Int,
     mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0) extends TypedImperativeAggregate[TopK]
+    inputAggBufferOffset: Int = 0) extends SketchBuildAgg(TopK)
     with BinaryLike[Expression] {
-
-  override def nullable: Boolean = false
-  override def dataType: DataType = BinaryType
 
   override def createAggregationBuffer(): TopK = TopK.create(k)
   override def update(buf: TopK, input: InternalRow): TopK = {
@@ -173,10 +141,6 @@ case class TopKAgg(
       buf.add(s.asInstanceOf[Long], it.asInstanceOf[UTF8String].toString)
     buf
   }
-  override def merge(a: TopK, b: TopK): TopK = a.merge(b)
-  override def eval(buf: TopK): Any = buf.serialize()
-  override def serialize(buf: TopK): Array[Byte] = buf.serialize()
-  override def deserialize(bytes: Array[Byte]): TopK = TopK.deserialize(bytes)
   override def withNewMutableAggBufferOffset(n: Int): TopKAgg = copy(mutableAggBufferOffset = n)
   override def withNewInputAggBufferOffset(n: Int): TopKAgg = copy(inputAggBufferOffset = n)
   override protected def withNewChildrenInternal(l: Expression, r: Expression): TopKAgg =

@@ -7,9 +7,8 @@ import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** distinct-count estimate from a serialized HLL */
-case class HllEstimate(child: Expression) extends SketchInspect[Hll] {
+case class HllEstimate(child: Expression) extends SketchInspect(Hll) {
   override def dataType: DataType = LongType
-  override protected def parse(bytes: Array[Byte]): Hll = Hll.deserialize(bytes)
   override protected def inspect(s: Hll): Any = s.estimate
   override protected def withNewChildInternal(c: Expression) = copy(c)
   override def prettyName: String = "hll_estimate"
@@ -17,24 +16,23 @@ case class HllEstimate(child: Expression) extends SketchInspect[Hll] {
 
 /** frequency upper-estimate from a serialized CMS */
 case class CmsEstimate(left: Expression, right: Expression)
-    extends SketchProbe[CountMin] {
+    extends SketchProbe(CountMin) {
   override def dataType: DataType = LongType
-  override protected def parse(bytes: Array[Byte]): CountMin = CountMin.deserialize(bytes)
   override protected def probe(s: CountMin, key: Array[Byte], off: Int, len: Int): Any =
     s.estimate(key, off, len)
   override protected def withNewChildrenInternal(l: Expression, r: Expression) = copy(l, r)
   override def prettyName: String = "cms_estimate"
 }
 
-case class CmsTotal(child: Expression) extends SketchInspect[CountMin] {
+case class CmsTotal(child: Expression) extends SketchInspect(CountMin) {
   override def dataType: DataType = LongType
-  override protected def parse(bytes: Array[Byte]): CountMin = CountMin.deserialize(bytes)
   override protected def inspect(s: CountMin): Any = s.total
   override protected def withNewChildInternal(c: Expression) = copy(c)
   override def prettyName: String = "cms_total"
 }
 
-abstract class DoubleArgSketchExpr[S <: AnyRef] extends BinaryExpression with SketchMemo[S] {
+abstract class DoubleArgSketchExpr[S <: AnyRef](protected val codec: SketchCodec[S])
+    extends BinaryExpression with SketchMemo[S] {
   protected def compute(sketch: S, x: Double): Any
 
   final def computeAny(sketchBytes: AnyRef, x: Double): Any =
@@ -52,44 +50,39 @@ abstract class DoubleArgSketchExpr[S <: AnyRef] extends BinaryExpression with Sk
 }
 
 case class TDigestQuantile(left: Expression, right: Expression)
-    extends DoubleArgSketchExpr[TDigest] {
+    extends DoubleArgSketchExpr(TDigest) {
   override def dataType: DataType = DoubleType
-  override protected def parse(bytes: Array[Byte]): TDigest = TDigest.deserialize(bytes)
   override protected def compute(s: TDigest, q: Double): Any = s.quantile(q)
   override protected def withNewChildrenInternal(l: Expression, r: Expression) = copy(l, r)
   override def prettyName: String = "tdigest_quantile"
 }
 
 case class TDigestCdf(left: Expression, right: Expression)
-    extends DoubleArgSketchExpr[TDigest] {
+    extends DoubleArgSketchExpr(TDigest) {
   override def dataType: DataType = DoubleType
-  override protected def parse(bytes: Array[Byte]): TDigest = TDigest.deserialize(bytes)
   override protected def compute(s: TDigest, x: Double): Any = s.cdf(x)
   override protected def withNewChildrenInternal(l: Expression, r: Expression) = copy(l, r)
   override def prettyName: String = "tdigest_cdf"
 }
 
 case class KllQuantile(left: Expression, right: Expression)
-    extends DoubleArgSketchExpr[Kll] {
+    extends DoubleArgSketchExpr(Kll) {
   override def dataType: DataType = DoubleType
-  override protected def parse(bytes: Array[Byte]): Kll = Kll.deserialize(bytes)
   override protected def compute(s: Kll, q: Double): Any = s.quantile(q)
   override protected def withNewChildrenInternal(l: Expression, r: Expression) = copy(l, r)
   override def prettyName: String = "kll_quantile"
 }
 
 case class KllRank(left: Expression, right: Expression)
-    extends DoubleArgSketchExpr[Kll] {
+    extends DoubleArgSketchExpr(Kll) {
   override def dataType: DataType = DoubleType
-  override protected def parse(bytes: Array[Byte]): Kll = Kll.deserialize(bytes)
   override protected def compute(s: Kll, x: Double): Any = s.rank(x)
   override protected def withNewChildrenInternal(l: Expression, r: Expression) = copy(l, r)
   override def prettyName: String = "kll_rank"
 }
 
-case class KllN(child: Expression) extends SketchInspect[Kll] {
+case class KllN(child: Expression) extends SketchInspect(Kll) {
   override def dataType: DataType = LongType
-  override protected def parse(bytes: Array[Byte]): Kll = Kll.deserialize(bytes)
   override protected def inspect(s: Kll): Any = s.n
   override protected def withNewChildInternal(c: Expression) = copy(c)
   override def prettyName: String = "kll_n"
@@ -98,9 +91,8 @@ case class KllN(child: Expression) extends SketchInspect[Kll] {
 /** Misra–Gries lower estimate: 0 for untracked keys. Guarantee:
   * estimate <= true <= estimate + freq_error (FrequentItems scaladoc). */
 case class FreqEstimate(left: Expression, right: Expression)
-    extends SketchProbe[FrequentItems] {
+    extends SketchProbe(FrequentItems) {
   override def dataType: DataType = LongType
-  override protected def parse(bytes: Array[Byte]): FrequentItems = FrequentItems.deserialize(bytes)
   override protected def probe(s: FrequentItems, key: Array[Byte], off: Int, len: Int): Any =
     s.estimate(new String(key, off, len, java.nio.charset.StandardCharsets.UTF_8))
   override protected def withNewChildrenInternal(l: Expression, r: Expression) = copy(l, r)
@@ -108,25 +100,22 @@ case class FreqEstimate(left: Expression, right: Expression)
 }
 
 /** The summary's tracked per-item undercount bound (<= n/(k+1)). */
-case class FreqError(child: Expression) extends SketchInspect[FrequentItems] {
+case class FreqError(child: Expression) extends SketchInspect(FrequentItems) {
   override def dataType: DataType = LongType
-  override protected def parse(bytes: Array[Byte]): FrequentItems = FrequentItems.deserialize(bytes)
   override protected def inspect(s: FrequentItems): Any = s.error
   override protected def withNewChildInternal(c: Expression) = copy(c)
   override def prettyName: String = "freq_error"
 }
 
-case class FreqTotal(child: Expression) extends SketchInspect[FrequentItems] {
+case class FreqTotal(child: Expression) extends SketchInspect(FrequentItems) {
   override def dataType: DataType = LongType
-  override protected def parse(bytes: Array[Byte]): FrequentItems = FrequentItems.deserialize(bytes)
   override protected def inspect(s: FrequentItems): Any = s.total
   override protected def withNewChildInternal(c: Expression) = copy(c)
   override def prettyName: String = "freq_total"
 }
 
-case class FreqNumTracked(child: Expression) extends SketchInspect[FrequentItems] {
+case class FreqNumTracked(child: Expression) extends SketchInspect(FrequentItems) {
   override def dataType: DataType = IntegerType
-  override protected def parse(bytes: Array[Byte]): FrequentItems = FrequentItems.deserialize(bytes)
   override protected def inspect(s: FrequentItems): Any = s.numTracked
   override protected def withNewChildInternal(c: Expression) = copy(c)
   override def prettyName: String = "freq_num_tracked"
@@ -134,13 +123,12 @@ case class FreqNumTracked(child: Expression) extends SketchInspect[FrequentItems
 
 /** the ranked rows of a serialized TopK: array<struct<score, item>>,
   * best-first under the sketch's (score DESC, item ASC) order */
-case class TopKItems(child: Expression) extends SketchInspect[TopK] {
+case class TopKItems(child: Expression) extends SketchInspect(TopK) {
   override def dataType: DataType = ArrayType(
     StructType(Seq(
       StructField("score", LongType, nullable = false),
       StructField("item", StringType, nullable = false))),
     containsNull = false)
-  override protected def parse(bytes: Array[Byte]): TopK = TopK.deserialize(bytes)
   override protected def inspect(s: TopK): Any =
     new org.apache.spark.sql.catalyst.util.GenericArrayData(
       s.result.map { case (sc, it) =>
@@ -152,9 +140,8 @@ case class TopKItems(child: Expression) extends SketchInspect[TopK] {
 
 /** distinct estimate from a serialized KMV bottom-k sketch (exact
   * below capacity, (k-1)/U_k above — `Kmv.estimate`) */
-case class KmvEstimate(child: Expression) extends SketchInspect[Kmv] {
+case class KmvEstimate(child: Expression) extends SketchInspect(Kmv) {
   override def dataType: DataType = LongType
-  override protected def parse(bytes: Array[Byte]): Kmv = Kmv.deserialize(bytes)
   override protected def inspect(s: Kmv): Any = s.estimate
   override protected def withNewChildInternal(c: Expression) = copy(c)
   override def prettyName: String = "kmv_estimate"
@@ -166,9 +153,9 @@ case class KmvEstimate(child: Expression) extends SketchInspect[Kmv] {
 abstract class KmvPairExpr extends BinaryExpression {
   protected def compute(a: Kmv, b: Kmv): Any
 
-  final def computeAny(a: AnyRef, b: AnyRef): Any =
-    compute(Kmv.deserialize(a.asInstanceOf[Array[Byte]]),
-      Kmv.deserialize(b.asInstanceOf[Array[Byte]]))
+  private def kmv(raw: AnyRef): Kmv = Kmv.deserialize(raw.asInstanceOf[Array[Byte]])
+
+  final def computeAny(a: AnyRef, b: AnyRef): Any = compute(kmv(a), kmv(b))
 
   final override protected def nullSafeEval(a: Any, b: Any): Any =
     computeAny(a.asInstanceOf[AnyRef], b.asInstanceOf[AnyRef])

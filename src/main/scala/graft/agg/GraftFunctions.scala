@@ -1,5 +1,6 @@
 package graft.agg
 
+import graft.sketch._
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{Cast, Expression}
@@ -66,16 +67,16 @@ object GraftFunctions {
 
   // ---- merge/rollup aggregations over serialized sketches ----
 
-  def bloom_merge_agg(sketch: Column): Column = agg(BloomMergeAgg(ex(sketch)))
-  def sbf_merge_agg(sketch: Column): Column = agg(SbfMergeAgg(ex(sketch)))
-  def lbf_merge_agg(sketch: Column): Column = agg(LbfMergeAgg(ex(sketch)))
-  def hll_merge_agg(sketch: Column): Column = agg(HllMergeAgg(ex(sketch)))
-  def cms_merge_agg(sketch: Column): Column = agg(CmsMergeAgg(ex(sketch)))
-  def freq_merge_agg(sketch: Column): Column = agg(FreqMergeAgg(ex(sketch)))
-  def tdigest_merge_agg(sketch: Column): Column = agg(TDigestMergeAgg(ex(sketch)))
-  def kll_merge_agg(sketch: Column): Column = agg(KllMergeAgg(ex(sketch)))
-  def kmv_merge_agg(sketch: Column): Column = agg(KmvMergeAgg(ex(sketch)))
-  def topk_merge_agg(sketch: Column): Column = agg(TopKMergeAgg(ex(sketch)))
+  def bloom_merge_agg(sketch: Column): Column = agg(SketchMergeAgg(ex(sketch), BloomFilter))
+  def sbf_merge_agg(sketch: Column): Column = agg(SketchMergeAgg(ex(sketch), ScalableBloom))
+  def lbf_merge_agg(sketch: Column): Column = agg(SketchMergeAgg(ex(sketch), LayeredBloom))
+  def hll_merge_agg(sketch: Column): Column = agg(SketchMergeAgg(ex(sketch), Hll))
+  def cms_merge_agg(sketch: Column): Column = agg(SketchMergeAgg(ex(sketch), CountMin))
+  def freq_merge_agg(sketch: Column): Column = agg(SketchMergeAgg(ex(sketch), FrequentItems))
+  def tdigest_merge_agg(sketch: Column): Column = agg(SketchMergeAgg(ex(sketch), TDigest))
+  def kll_merge_agg(sketch: Column): Column = agg(SketchMergeAgg(ex(sketch), Kll))
+  def kmv_merge_agg(sketch: Column): Column = agg(SketchMergeAgg(ex(sketch), Kmv))
+  def topk_merge_agg(sketch: Column): Column = agg(SketchMergeAgg(ex(sketch), TopK))
 
   // ---- probes / inspectors ----
 
@@ -206,19 +207,10 @@ object GraftFunctions {
     add("graft_simhash64")(es => graft.pipeline.SimHash64(es.head))
     add("graft_nfc")(es => graft.pipeline.NfcNormalize(es.head))
     add("graft_strip_accents")(es => graft.pipeline.StripAccents(es.head))
-    def addMerge(name: String)(builder: Expression => org.apache.spark.sql.catalyst.expressions.aggregate.AggregateFunction): Unit =
-      add(name)(es => AggregateExpression(builder(es.head),
+    SketchCodec.all.foreach { codec =>
+      add(s"graft_${codec.name}_merge_agg")(es => AggregateExpression(SketchMergeAgg(es.head, codec),
         org.apache.spark.sql.catalyst.expressions.aggregate.Complete, isDistinct = false))
-    addMerge("graft_bloom_merge_agg")(BloomMergeAgg(_))
-    addMerge("graft_sbf_merge_agg")(SbfMergeAgg(_))
-    addMerge("graft_lbf_merge_agg")(LbfMergeAgg(_))
-    addMerge("graft_hll_merge_agg")(HllMergeAgg(_))
-    addMerge("graft_cms_merge_agg")(CmsMergeAgg(_))
-    addMerge("graft_freq_merge_agg")(FreqMergeAgg(_))
-    addMerge("graft_tdigest_merge_agg")(TDigestMergeAgg(_))
-    addMerge("graft_kll_merge_agg")(KllMergeAgg(_))
-    addMerge("graft_kmv_merge_agg")(KmvMergeAgg(_))
-    addMerge("graft_topk_merge_agg")(TopKMergeAgg(_))
+    }
     acc.toSeq
   }
 

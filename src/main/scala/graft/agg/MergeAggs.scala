@@ -1,6 +1,6 @@
 package graft.agg
 
-import graft.sketch._
+import graft.sketch.SketchCodec
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
@@ -8,175 +8,63 @@ import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.types.{BinaryType, DataType}
 
 /**
- * Merge-aggregates: fold a column of SERIALIZED sketches into one
- * sketch. This is the sketch library's rollup operator — re-aggregate
- * a sketch table to coarser grain (per-source -> global, per-day ->
- * per-month) without touching raw data — and the final-merge step of
- * the resumable build (SketchBuildJob): per-partition checkpoint
- * sketches are folded back into the result with exactly the same
- * associative merge the in-flight aggregation uses.
+ * Merge-aggregate: fold a column of SERIALIZED sketches of one family
+ * into one sketch, through the family's codec. This is the sketch
+ * library's rollup operator — re-aggregate a sketch table to coarser
+ * grain (per-source -> global, per-day -> per-month) without touching
+ * raw data — and the final-merge step of the resumable build
+ * (SketchBuildJob): per-partition checkpoint sketches are folded back
+ * into the result with exactly the same associative merge the
+ * in-flight aggregation uses.
  *
  * Buffer is a nullable holder: the first input fixes the parameters
  * (all inputs must share them — same contract as the reference's
  * layer merge).
  */
-abstract class SketchMergeAgg[S <: AnyRef] extends TypedImperativeAggregate[SketchMergeAgg.Holder[S]]
+case class SketchMergeAgg[S <: AnyRef](
+    child: Expression,
+    codec: SketchCodec[S],
+    mutableAggBufferOffset: Int = 0,
+    inputAggBufferOffset: Int = 0) extends TypedImperativeAggregate[SketchMergeAgg.Holder[S]]
     with UnaryLike[Expression] {
 
   override def nullable: Boolean = true
   override def dataType: DataType = BinaryType
 
-  protected def fromBytes(bytes: Array[Byte]): S
-  protected def mergeSketch(a: S, b: S): S
-  protected def toBytes(s: S): Array[Byte]
-
   override def createAggregationBuffer(): SketchMergeAgg.Holder[S] =
     new SketchMergeAgg.Holder[S](null.asInstanceOf[S])
 
-  final override def update(buf: SketchMergeAgg.Holder[S], input: InternalRow): SketchMergeAgg.Holder[S] = {
+  override def update(buf: SketchMergeAgg.Holder[S], input: InternalRow): SketchMergeAgg.Holder[S] = {
     val v = child.eval(input)
     if (v != null) {
-      val s = fromBytes(v.asInstanceOf[Array[Byte]])
-      buf.s = if (buf.s == null) s else mergeSketch(buf.s, s)
+      val s = codec.deserialize(v.asInstanceOf[Array[Byte]])
+      buf.s = if (buf.s == null) s else codec.merge(buf.s, s)
     }
     buf
   }
 
-  final override def merge(a: SketchMergeAgg.Holder[S], b: SketchMergeAgg.Holder[S]): SketchMergeAgg.Holder[S] = {
-    if (b.s != null) a.s = if (a.s == null) b.s else mergeSketch(a.s, b.s)
+  override def merge(a: SketchMergeAgg.Holder[S], b: SketchMergeAgg.Holder[S]): SketchMergeAgg.Holder[S] = {
+    if (b.s != null) a.s = if (a.s == null) b.s else codec.merge(a.s, b.s)
     a
   }
 
-  final override def eval(buf: SketchMergeAgg.Holder[S]): Any =
-    if (buf.s == null) null else toBytes(buf.s)
+  override def eval(buf: SketchMergeAgg.Holder[S]): Any =
+    if (buf.s == null) null else codec.serialize(buf.s)
 
-  final override def serialize(buf: SketchMergeAgg.Holder[S]): Array[Byte] =
-    if (buf.s == null) Array.emptyByteArray else toBytes(buf.s)
+  override def serialize(buf: SketchMergeAgg.Holder[S]): Array[Byte] =
+    if (buf.s == null) Array.emptyByteArray else codec.serialize(buf.s)
 
-  final override def deserialize(bytes: Array[Byte]): SketchMergeAgg.Holder[S] =
-    new SketchMergeAgg.Holder[S](if (bytes.isEmpty) null.asInstanceOf[S] else fromBytes(bytes))
+  override def deserialize(bytes: Array[Byte]): SketchMergeAgg.Holder[S] =
+    new SketchMergeAgg.Holder[S](if (bytes.isEmpty) null.asInstanceOf[S] else codec.deserialize(bytes))
+
+  override def withNewMutableAggBufferOffset(n: Int): SketchMergeAgg[S] = copy(mutableAggBufferOffset = n)
+  override def withNewInputAggBufferOffset(n: Int): SketchMergeAgg[S] = copy(inputAggBufferOffset = n)
+  override protected def withNewChildInternal(c: Expression): SketchMergeAgg[S] = copy(child = c)
+  override def prettyName: String = s"${codec.name}_merge_agg"
+  // prettyName already names the family; plans print `hll_merge_agg(s#1, 0, 0)`
+  override protected def stringArgs: Iterator[Any] = Iterator(child, mutableAggBufferOffset, inputAggBufferOffset)
 }
 
 object SketchMergeAgg {
   final class Holder[S](var s: S) extends Serializable
-}
-
-case class BloomMergeAgg(child: Expression,
-    mutableAggBufferOffset: Int = 0, inputAggBufferOffset: Int = 0)
-    extends SketchMergeAgg[BloomFilter] {
-  override protected def fromBytes(b: Array[Byte]): BloomFilter = BloomFilter.deserialize(b)
-  override protected def mergeSketch(a: BloomFilter, b: BloomFilter): BloomFilter = a.orInPlace(b)
-  override protected def toBytes(s: BloomFilter): Array[Byte] = s.serialize()
-  override def withNewMutableAggBufferOffset(n: Int): BloomMergeAgg = copy(mutableAggBufferOffset = n)
-  override def withNewInputAggBufferOffset(n: Int): BloomMergeAgg = copy(inputAggBufferOffset = n)
-  override protected def withNewChildInternal(c: Expression): BloomMergeAgg = copy(child = c)
-  override def prettyName: String = "bloom_merge_agg"
-}
-
-case class SbfMergeAgg(child: Expression,
-    mutableAggBufferOffset: Int = 0, inputAggBufferOffset: Int = 0)
-    extends SketchMergeAgg[ScalableBloom] {
-  override protected def fromBytes(b: Array[Byte]): ScalableBloom = ScalableBloom.deserialize(b)
-  override protected def mergeSketch(a: ScalableBloom, b: ScalableBloom): ScalableBloom = a.mergeInPlace(b)
-  override protected def toBytes(s: ScalableBloom): Array[Byte] = s.serialize()
-  override def withNewMutableAggBufferOffset(n: Int): SbfMergeAgg = copy(mutableAggBufferOffset = n)
-  override def withNewInputAggBufferOffset(n: Int): SbfMergeAgg = copy(inputAggBufferOffset = n)
-  override protected def withNewChildInternal(c: Expression): SbfMergeAgg = copy(child = c)
-  override def prettyName: String = "sbf_merge_agg"
-}
-
-case class LbfMergeAgg(child: Expression,
-    mutableAggBufferOffset: Int = 0, inputAggBufferOffset: Int = 0)
-    extends SketchMergeAgg[LayeredBloom] {
-  override protected def fromBytes(b: Array[Byte]): LayeredBloom = LayeredBloom.deserialize(b)
-  override protected def mergeSketch(a: LayeredBloom, b: LayeredBloom): LayeredBloom = a.mergeInPlace(b)
-  override protected def toBytes(s: LayeredBloom): Array[Byte] = s.serialize()
-  override def withNewMutableAggBufferOffset(n: Int): LbfMergeAgg = copy(mutableAggBufferOffset = n)
-  override def withNewInputAggBufferOffset(n: Int): LbfMergeAgg = copy(inputAggBufferOffset = n)
-  override protected def withNewChildInternal(c: Expression): LbfMergeAgg = copy(child = c)
-  override def prettyName: String = "lbf_merge_agg"
-}
-
-case class HllMergeAgg(child: Expression,
-    mutableAggBufferOffset: Int = 0, inputAggBufferOffset: Int = 0)
-    extends SketchMergeAgg[Hll] {
-  override protected def fromBytes(b: Array[Byte]): Hll = Hll.deserialize(b)
-  override protected def mergeSketch(a: Hll, b: Hll): Hll = a.merge(b)
-  override protected def toBytes(s: Hll): Array[Byte] = s.serialize()
-  override def withNewMutableAggBufferOffset(n: Int): HllMergeAgg = copy(mutableAggBufferOffset = n)
-  override def withNewInputAggBufferOffset(n: Int): HllMergeAgg = copy(inputAggBufferOffset = n)
-  override protected def withNewChildInternal(c: Expression): HllMergeAgg = copy(child = c)
-  override def prettyName: String = "hll_merge_agg"
-}
-
-case class CmsMergeAgg(child: Expression,
-    mutableAggBufferOffset: Int = 0, inputAggBufferOffset: Int = 0)
-    extends SketchMergeAgg[CountMin] {
-  override protected def fromBytes(b: Array[Byte]): CountMin = CountMin.deserialize(b)
-  override protected def mergeSketch(a: CountMin, b: CountMin): CountMin = a.merge(b)
-  override protected def toBytes(s: CountMin): Array[Byte] = s.serialize()
-  override def withNewMutableAggBufferOffset(n: Int): CmsMergeAgg = copy(mutableAggBufferOffset = n)
-  override def withNewInputAggBufferOffset(n: Int): CmsMergeAgg = copy(inputAggBufferOffset = n)
-  override protected def withNewChildInternal(c: Expression): CmsMergeAgg = copy(child = c)
-  override def prettyName: String = "cms_merge_agg"
-}
-
-case class TDigestMergeAgg(child: Expression,
-    mutableAggBufferOffset: Int = 0, inputAggBufferOffset: Int = 0)
-    extends SketchMergeAgg[TDigest] {
-  override protected def fromBytes(b: Array[Byte]): TDigest = TDigest.deserialize(b)
-  override protected def mergeSketch(a: TDigest, b: TDigest): TDigest = a.merge(b)
-  override protected def toBytes(s: TDigest): Array[Byte] = s.serialize()
-  override def withNewMutableAggBufferOffset(n: Int): TDigestMergeAgg = copy(mutableAggBufferOffset = n)
-  override def withNewInputAggBufferOffset(n: Int): TDigestMergeAgg = copy(inputAggBufferOffset = n)
-  override protected def withNewChildInternal(c: Expression): TDigestMergeAgg = copy(child = c)
-  override def prettyName: String = "tdigest_merge_agg"
-}
-
-case class KllMergeAgg(child: Expression,
-    mutableAggBufferOffset: Int = 0, inputAggBufferOffset: Int = 0)
-    extends SketchMergeAgg[Kll] {
-  override protected def fromBytes(b: Array[Byte]): Kll = Kll.deserialize(b)
-  override protected def mergeSketch(a: Kll, b: Kll): Kll = a.merge(b)
-  override protected def toBytes(s: Kll): Array[Byte] = s.serialize()
-  override def withNewMutableAggBufferOffset(n: Int): KllMergeAgg = copy(mutableAggBufferOffset = n)
-  override def withNewInputAggBufferOffset(n: Int): KllMergeAgg = copy(inputAggBufferOffset = n)
-  override protected def withNewChildInternal(c: Expression): KllMergeAgg = copy(child = c)
-  override def prettyName: String = "kll_merge_agg"
-}
-
-case class FreqMergeAgg(child: Expression,
-    mutableAggBufferOffset: Int = 0, inputAggBufferOffset: Int = 0)
-    extends SketchMergeAgg[FrequentItems] {
-  override protected def fromBytes(b: Array[Byte]): FrequentItems = FrequentItems.deserialize(b)
-  override protected def mergeSketch(a: FrequentItems, b: FrequentItems): FrequentItems = a.merge(b)
-  override protected def toBytes(s: FrequentItems): Array[Byte] = s.serialize()
-  override def withNewMutableAggBufferOffset(n: Int): FreqMergeAgg = copy(mutableAggBufferOffset = n)
-  override def withNewInputAggBufferOffset(n: Int): FreqMergeAgg = copy(inputAggBufferOffset = n)
-  override protected def withNewChildInternal(c: Expression): FreqMergeAgg = copy(child = c)
-  override def prettyName: String = "freq_merge_agg"
-}
-
-case class KmvMergeAgg(child: Expression,
-    mutableAggBufferOffset: Int = 0, inputAggBufferOffset: Int = 0)
-    extends SketchMergeAgg[Kmv] {
-  override protected def fromBytes(b: Array[Byte]): Kmv = Kmv.deserialize(b)
-  override protected def mergeSketch(a: Kmv, b: Kmv): Kmv = a.merge(b)
-  override protected def toBytes(s: Kmv): Array[Byte] = s.serialize()
-  override def withNewMutableAggBufferOffset(n: Int): KmvMergeAgg = copy(mutableAggBufferOffset = n)
-  override def withNewInputAggBufferOffset(n: Int): KmvMergeAgg = copy(inputAggBufferOffset = n)
-  override protected def withNewChildInternal(c: Expression): KmvMergeAgg = copy(child = c)
-  override def prettyName: String = "kmv_merge_agg"
-}
-
-case class TopKMergeAgg(child: Expression,
-    mutableAggBufferOffset: Int = 0, inputAggBufferOffset: Int = 0)
-    extends SketchMergeAgg[TopK] {
-  override protected def fromBytes(b: Array[Byte]): TopK = TopK.deserialize(b)
-  override protected def mergeSketch(a: TopK, b: TopK): TopK = a.merge(b)
-  override protected def toBytes(s: TopK): Array[Byte] = s.serialize()
-  override def withNewMutableAggBufferOffset(n: Int): TopKMergeAgg = copy(mutableAggBufferOffset = n)
-  override def withNewInputAggBufferOffset(n: Int): TopKMergeAgg = copy(inputAggBufferOffset = n)
-  override protected def withNewChildInternal(c: Expression): TopKMergeAgg = copy(child = c)
-  override def prettyName: String = "topk_merge_agg"
 }

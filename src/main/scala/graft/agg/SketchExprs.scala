@@ -38,22 +38,24 @@ case class SketchRef(bc: Broadcast[Array[Byte]], bytes: Int) extends LeafExpress
  * reference's `check`/`multi` (`csrc/bloomd/conn_handler.c:135-228`)
  * and `info` fields, as Catalyst expressions.
  *
- * Deserialization of our blobs is a header parse that WRAPS the byte
- * array (no bitmap copy), so per-row probe cost is hashing + k bit
- * reads. A same-reference memo still short-circuits the wrap when the
- * engine hands us the identical array object (literals, broadcast
- * handles, cached rows).
+ * Sketches are parsed through their family's codec. Only
+ * `BloomFilter.deserialize` wraps the byte array; the scalable and
+ * layered blooms copy every layer, and the other families decode into
+ * fresh arrays or collections. What keeps the per-row probe cost at
+ * hashing + k bit reads is a same-reference memo: while the engine
+ * hands over the identical array object (literals, broadcast handles,
+ * cached rows), the sketch is parsed once, not once per row.
  */
-trait SketchMemo[S <: AnyRef] {
+trait SketchMemo[S <: AnyRef] extends Serializable { // so the codec-taking bases below serialize (see SketchBuildAgg)
   @transient private var lastRef: AnyRef = _
   @transient private var lastSketch: S = _
 
-  protected def parse(bytes: Array[Byte]): S
+  protected def codec: SketchCodec[S]
 
   protected final def sketchOf(raw: Any): S = {
     val bytes = raw.asInstanceOf[Array[Byte]]
     if (bytes ne lastRef) {
-      lastSketch = parse(bytes)
+      lastSketch = codec.deserialize(bytes)
       lastRef = bytes
     }
     lastSketch
@@ -68,7 +70,8 @@ trait SketchMemo[S <: AnyRef] {
  * (standard Spark pattern), keeping the parse memo and a reusable key
  * buffer so the per-row cost is hash + k bit reads, zero allocation.
  */
-abstract class SketchProbe[S <: AnyRef] extends BinaryExpression with SketchMemo[S] {
+abstract class SketchProbe[S <: AnyRef](protected val codec: SketchCodec[S])
+    extends BinaryExpression with SketchMemo[S] {
   override def left: Expression // sketch binary
   override def right: Expression // key string
 
@@ -99,9 +102,8 @@ abstract class SketchProbe[S <: AnyRef] extends BinaryExpression with SketchMemo
 
 /** `check <filter> <key>` -> Yes/No (`sbf.c:89-97`, `bloom.c:141-150`) */
 case class BloomContains(left: Expression, right: Expression)
-    extends SketchProbe[BloomFilter] {
+    extends SketchProbe(BloomFilter) {
   override def dataType: DataType = BooleanType
-  override protected def parse(bytes: Array[Byte]): BloomFilter = BloomFilter.deserialize(bytes)
   override protected def probe(s: BloomFilter, key: Array[Byte], off: Int, len: Int): Any =
     s.containsKey(key, off, len)
   override protected def withNewChildrenInternal(l: Expression, r: Expression) = copy(l, r)
@@ -109,9 +111,8 @@ case class BloomContains(left: Expression, right: Expression)
 }
 
 case class SbfContains(left: Expression, right: Expression)
-    extends SketchProbe[ScalableBloom] {
+    extends SketchProbe(ScalableBloom) {
   override def dataType: DataType = BooleanType
-  override protected def parse(bytes: Array[Byte]): ScalableBloom = ScalableBloom.deserialize(bytes)
   override protected def probe(s: ScalableBloom, key: Array[Byte], off: Int, len: Int): Any =
     s.contains(key, off, len)
   override protected def withNewChildrenInternal(l: Expression, r: Expression) = copy(l, r)
@@ -120,16 +121,16 @@ case class SbfContains(left: Expression, right: Expression)
 
 /** Rust-server `check` -> multiplicity count (`src/lbf.rs:74-89`) */
 case class LbfCount(left: Expression, right: Expression)
-    extends SketchProbe[LayeredBloom] {
+    extends SketchProbe(LayeredBloom) {
   override def dataType: DataType = IntegerType
-  override protected def parse(bytes: Array[Byte]): LayeredBloom = LayeredBloom.deserialize(bytes)
   override protected def probe(s: LayeredBloom, key: Array[Byte], off: Int, len: Int): Any =
     s.count(key, off, len)
   override protected def withNewChildrenInternal(l: Expression, r: Expression) = copy(l, r)
   override def prettyName: String = "lbf_count"
 }
 
-abstract class SketchInspect[S <: AnyRef] extends UnaryExpression with SketchMemo[S] {
+abstract class SketchInspect[S <: AnyRef](protected val codec: SketchCodec[S])
+    extends UnaryExpression with SketchMemo[S] {
   protected def inspect(sketch: S): Any
 
   final def inspectAny(sketchBytes: AnyRef): Any = inspect(sketchOf(sketchBytes))
@@ -146,51 +147,45 @@ abstract class SketchInspect[S <: AnyRef] extends UnaryExpression with SketchMem
 }
 
 /** header count — the reference's `size` info field */
-case class BloomCount(child: Expression) extends SketchInspect[BloomFilter] {
+case class BloomCount(child: Expression) extends SketchInspect(BloomFilter) {
   override def dataType: DataType = LongType
-  override protected def parse(bytes: Array[Byte]): BloomFilter = BloomFilter.deserialize(bytes)
   override protected def inspect(s: BloomFilter): Any = s.count
   override protected def withNewChildInternal(c: Expression) = copy(c)
   override def prettyName: String = "bloom_count"
 }
 
 /** order-independent fill-ratio cardinality estimate */
-case class BloomEstimate(child: Expression) extends SketchInspect[BloomFilter] {
+case class BloomEstimate(child: Expression) extends SketchInspect(BloomFilter) {
   override def dataType: DataType = LongType
-  override protected def parse(bytes: Array[Byte]): BloomFilter = BloomFilter.deserialize(bytes)
   override protected def inspect(s: BloomFilter): Any = s.estimateItems
   override protected def withNewChildInternal(c: Expression) = copy(c)
   override def prettyName: String = "bloom_estimate"
 }
 
-case class SbfSize(child: Expression) extends SketchInspect[ScalableBloom] {
+case class SbfSize(child: Expression) extends SketchInspect(ScalableBloom) {
   override def dataType: DataType = LongType
-  override protected def parse(bytes: Array[Byte]): ScalableBloom = ScalableBloom.deserialize(bytes)
   override protected def inspect(s: ScalableBloom): Any = s.size
   override protected def withNewChildInternal(c: Expression) = copy(c)
   override def prettyName: String = "sbf_size"
 }
 
-case class SbfNumLayers(child: Expression) extends SketchInspect[ScalableBloom] {
+case class SbfNumLayers(child: Expression) extends SketchInspect(ScalableBloom) {
   override def dataType: DataType = IntegerType
-  override protected def parse(bytes: Array[Byte]): ScalableBloom = ScalableBloom.deserialize(bytes)
   override protected def inspect(s: ScalableBloom): Any = s.numLayers
   override protected def withNewChildInternal(c: Expression) = copy(c)
   override def prettyName: String = "sbf_num_layers"
 }
 
-case class SbfTotalCapacity(child: Expression) extends SketchInspect[ScalableBloom] {
+case class SbfTotalCapacity(child: Expression) extends SketchInspect(ScalableBloom) {
   override def dataType: DataType = LongType
-  override protected def parse(bytes: Array[Byte]): ScalableBloom = ScalableBloom.deserialize(bytes)
   override protected def inspect(s: ScalableBloom): Any = s.totalCapacity
   override protected def withNewChildInternal(c: Expression) = copy(c)
   override def prettyName: String = "sbf_total_capacity"
 }
 
 /** distinct-key count = layer-0 count (`src/lbf.rs:91-98`) */
-case class LbfSize(child: Expression) extends SketchInspect[LayeredBloom] {
+case class LbfSize(child: Expression) extends SketchInspect(LayeredBloom) {
   override def dataType: DataType = LongType
-  override protected def parse(bytes: Array[Byte]): LayeredBloom = LayeredBloom.deserialize(bytes)
   override protected def inspect(s: LayeredBloom): Any = s.size
   override protected def withNewChildInternal(c: Expression) = copy(c)
   override def prettyName: String = "lbf_size"

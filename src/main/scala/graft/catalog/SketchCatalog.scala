@@ -562,9 +562,8 @@ class SketchCatalog(
     }
     snapshot
       .map { e => withRead(e) { e.synchronized {
-        val s = e.sketch // do NOT fault in for list (reference lists proxied too)
-        val bytes = s.map(_.totalByteSize).getOrElse(onDiskBytes(e.name))
-        val size = s.map(_.size).getOrElse(onDiskSize(e.name))
+        // do NOT fault in for list (reference lists proxied too)
+        val (bytes, size) = storageAndSize(e)
         (e.name, e.probability, bytes, e.capacity, size)
       } } }
       .toDF("name", "probability", "bytes", "capacity", "size")
@@ -577,10 +576,8 @@ class SketchCatalog(
       import spark.implicits._
       // entry READ lock for the same reason as `list` above
       val (c, proxied, storage, size) = withRead(e) { e.synchronized {
-        val cc = e.counters.copy()
-        (cc, e.sketch.isEmpty,
-          e.sketch.map(_.totalByteSize).getOrElse(onDiskBytes(e.name)),
-          e.sketch.map(_.size).getOrElse(onDiskSize(e.name)))
+        val (storage, size) = storageAndSize(e)
+        (e.counters.copy(), e.sketch.isEmpty, storage, size)
       } }
       Right(Seq((
         e.capacity, c.checkHits + c.checkMisses, c.checkHits, c.checkMisses,
@@ -675,14 +672,12 @@ class SketchCatalog(
     e.dirty = false
   }
 
-  private def onDiskBytes(name: String): Long = {
-    val f = filterDir(name).resolve("sketch.bin")
-    if (Files.exists(f)) ScalableBloom.deserialize(Files.readAllBytes(f)).totalByteSize else 0L
-  }
-
-  private def onDiskSize(name: String): Long = {
-    val f = filterDir(name).resolve("sketch.bin")
-    if (Files.exists(f)) ScalableBloom.deserialize(Files.readAllBytes(f)).size else 0L
+  /** (layer bytes, key count) of the loaded sketch, or of `sketch.bin`
+    * read once for a proxied filter (0, 0 when nothing is persisted) */
+  private def storageAndSize(e: Entry): (Long, Long) = {
+    val f = filterDir(e.name).resolve("sketch.bin")
+    e.sketch.orElse(Option.when(Files.exists(f))(ScalableBloom.deserialize(Files.readAllBytes(f))))
+      .fold((0L, 0L))(s => (s.totalByteSize, s.size))
   }
 
   /** startup restore: scan for bloomd.* dirs, register PROXIED

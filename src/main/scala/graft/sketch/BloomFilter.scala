@@ -162,7 +162,10 @@ final class BloomFilter private (
     new BloomFilter(java.util.Arrays.copyOf(data, data.length), kNum, count)
 }
 
-object BloomFilter {
+object BloomFilter extends SketchCodec[BloomFilter] {
+  val name = "bloom"
+  def serialize(s: BloomFilter): Array[Byte] = s.serialize()
+  def merge(a: BloomFilter, b: BloomFilter): BloomFilter = a.orInPlace(b)
 
   def create(params: BloomParams): BloomFilter = {
     require(params.bytes <= Int.MaxValue,

@@ -81,7 +81,11 @@ final class CountMin(val depth: Int, val width: Int, val counts: Array[Long],
   }
 }
 
-object CountMin {
+object CountMin extends SketchCodec[CountMin] {
+  val name = "cms"
+  def serialize(s: CountMin): Array[Byte] = s.serialize()
+  def merge(a: CountMin, b: CountMin): CountMin = a.merge(b)
+
   final val Magic = 0x47434d53 // "GCMS"
 
   def create(depth: Int, width: Int): CountMin =

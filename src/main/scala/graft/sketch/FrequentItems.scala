@@ -137,7 +137,11 @@ final class FrequentItems(val k: Int,
   }
 }
 
-object FrequentItems {
+object FrequentItems extends SketchCodec[FrequentItems] {
+  val name = "freq"
+  def serialize(s: FrequentItems): Array[Byte] = s.serialize()
+  def merge(a: FrequentItems, b: FrequentItems): FrequentItems = a.merge(b)
+
   final val Magic = 0x474d4753 // "GMGS"
 
   def create(k: Int): FrequentItems =

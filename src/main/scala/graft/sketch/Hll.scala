@@ -81,7 +81,11 @@ final class Hll(val precision: Int, val registers: Array[Byte]) extends Serializ
   }
 }
 
-object Hll {
+object Hll extends SketchCodec[Hll] {
+  val name = "hll"
+  def serialize(s: Hll): Array[Byte] = s.serialize()
+  def merge(a: Hll, b: Hll): Hll = a.merge(b)
+
   final val Magic = 0x47484c4c // "GHLL"
 
   def create(precision: Int = 14): Hll = new Hll(precision, new Array[Byte](1 << precision))

@@ -129,7 +129,11 @@ final class Kll(val k: Int, var levels: ArrayBuffer[ArrayBuffer[Double]],
   }
 }
 
-object Kll {
+object Kll extends SketchCodec[Kll] {
+  val name = "kll"
+  def serialize(s: Kll): Array[Byte] = s.serialize()
+  def merge(a: Kll, b: Kll): Kll = a.merge(b)
+
   final val Magic = 0x474b4c4c // "GKLL"
 
   def create(k: Int = 200): Kll = new Kll(k, ArrayBuffer(ArrayBuffer.empty[Double]), 0L)

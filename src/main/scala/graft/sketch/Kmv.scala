@@ -78,7 +78,11 @@ final class Kmv private (val k: Int, val entries: java.util.TreeSet[String])
   }
 }
 
-object Kmv {
+object Kmv extends SketchCodec[Kmv] {
+  val name = "kmv"
+  def serialize(s: Kmv): Array[Byte] = s.serialize()
+  def merge(a: Kmv, b: Kmv): Kmv = a.merge(b)
+
   /** 16^12: the hash-prefix space the integer estimator divides in */
   val HexSpace: Long = 1L << 48
 

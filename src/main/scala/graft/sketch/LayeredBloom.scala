@@ -132,7 +132,11 @@ final class LayeredBloom(
   }
 }
 
-object LayeredBloom {
+object LayeredBloom extends SketchCodec[LayeredBloom] {
+  val name = "lbf"
+  def serialize(s: LayeredBloom): Array[Byte] = s.serialize()
+  def merge(a: LayeredBloom, b: LayeredBloom): LayeredBloom = a.mergeInPlace(b)
+
   final val Magic = 0x474c4246 // "GLBF"
 
   def create(capacity: Long = 100000L, fpProb: Double = 1e-4): LayeredBloom =

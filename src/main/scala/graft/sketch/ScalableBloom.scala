@@ -195,7 +195,11 @@ final class ScalableBloom(
   }
 }
 
-object ScalableBloom {
+object ScalableBloom extends SketchCodec[ScalableBloom] {
+  val name = "sbf"
+  def serialize(s: ScalableBloom): Array[Byte] = s.serialize()
+  def merge(a: ScalableBloom, b: ScalableBloom): ScalableBloom = a.mergeInPlace(b)
+
   final val Magic = 0x47534246 // "GSBF"
 
   /** reference defaults (`csrc/libbloom/sbf.h:30-41`) */

@@ -161,7 +161,11 @@ final class TDigest(
   }
 }
 
-object TDigest {
+object TDigest extends SketchCodec[TDigest] {
+  val name = "tdigest"
+  def serialize(s: TDigest): Array[Byte] = s.serialize()
+  def merge(a: TDigest, b: TDigest): TDigest = a.merge(b)
+
   final val Magic = 0x47544447 // "GTDG"
 
   def create(compression: Double = 100.0): TDigest =

@@ -75,7 +75,11 @@ final class TopK private (val k: Int,
   }
 }
 
-object TopK {
+object TopK extends SketchCodec[TopK] {
+  val name = "topk"
+  def serialize(s: TopK): Array[Byte] = s.serialize()
+  def merge(a: TopK, b: TopK): TopK = a.merge(b)
+
   def create(k: Int): TopK = new TopK(k, new ArrayBuffer[(Long, String)](k))
 
   def deserialize(bytes: Array[Byte]): TopK = {

@@ -76,6 +76,24 @@ class CatalogSpec extends AnyFunSuite {
     assert(!c.exists("lc"))
   }
 
+  test("info on a closed filter reports the loaded size and storage without faulting it in") {
+    import spark.implicits._
+    val c = freshCatalog()
+    c.create("ci", capacity = 20000)
+    // past capacity, so the ladder has grown and storage spans two layers
+    c.setKeys("ci", (0 until 30000).map(i => s"ck$i").toDF("k")).toOption.get.count()
+    val before = c.info("ci").toOption.get.head()
+    assert(c.close("ci") == "Done")
+    val after = c.info("ci").toOption.get.head()
+    assert(after.getAs[Int]("in_memory") == 0)
+    assert(after.getAs[Long]("size") == before.getAs[Long]("size"))
+    assert(after.getAs[Long]("storage") == before.getAs[Long]("storage"))
+    assert(after.getAs[Long]("page_ins") == before.getAs[Long]("page_ins"))
+    val listed = c.list("ci").head()
+    assert(listed.getAs[Long]("size") == before.getAs[Long]("size"))
+    assert(listed.getAs[Long]("bytes") == before.getAs[Long]("storage"))
+  }
+
   test("restore across catalog restart keeps membership and size") {
     import spark.implicits._
     val dir = Files.createTempDirectory("graftcat").toString
