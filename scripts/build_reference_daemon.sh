@@ -9,6 +9,10 @@ OUT=${1:-/root/repo/target/refbloomd}
 mkdir -p "$OUT"
 cd "$OUT"
 if [ -x bloomd ]; then echo "bloomd already built at $OUT/bloomd"; exit 0; fi
+# fail in one line, before any compile, when the reference tree is absent
+for d in "$REF/csrc" "$REF/deps"; do
+  if [ ! -d "$d" ]; then echo "reference daemon sources missing: $d not found" >&2; exit 2; fi
+done
 
 CXXFLAGS="-fno-exceptions -O2 -fno-semantic-interposition"
 for f in "$REF"/deps/spookyhash/*.cpp; do g++ $CXXFLAGS -I"$REF/deps/spookyhash" -c "$f" -o "spooky_$(basename "$f" .cpp).o"; done

@@ -2,10 +2,13 @@ package graft.agg
 
 import graft.sketch._
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.trees.UnaryLike
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
 /**
@@ -38,11 +41,24 @@ abstract class SketchBuildAgg[S <: AnyRef](codec: SketchCodec[S]) extends TypedI
   * facade casts the key to string; SQL builders wrap with Cast, so
   * `child` is StringType by construction. Keys are the UTF-8 bytes of
   * the input, matching the reference's ASCII wire keys, so estimates
-  * are bit-compatible with a bloomd fed the same key strings. */
+  * are bit-compatible with a bloomd fed the same key strings.
+  *
+  * [[SketchOverExplode]] may instead hand the aggregate the array that
+  * `explode` would have turned into rows. Then each non-null element is
+  * one key, in array order: strings by their bytes, integers by the
+  * decimal digits `Cast(x AS STRING)` would produce, so the sketch is
+  * byte-identical to the exploded build. */
 abstract class KeyedSketchAgg[T <: AnyRef](codec: SketchCodec[T]) extends SketchBuildAgg[T](codec)
     with UnaryLike[Expression] {
 
   protected def updateKey(buffer: T, key: Array[Byte], len: Int): Unit
+
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case _: StringType => TypeCheckResult.TypeCheckSuccess
+    case ArrayType(et, _) if KeyedSketchAgg.isKeyElement(et) => TypeCheckResult.TypeCheckSuccess
+    case other => TypeCheckResult.TypeCheckFailure(
+      s"$prettyName takes a string key or an array of strings or integers, not ${other.catalogString}")
+  }
 
   // reusable key buffer: UTF8String.getBytes would allocate a byte[]
   // per row (columnar scans never hand out exactly-spanning arrays),
@@ -50,17 +66,131 @@ abstract class KeyedSketchAgg[T <: AnyRef](codec: SketchCodec[T]) extends Sketch
   // this expression serves one aggregation thread, so a plain var is safe.
   @transient private var scratch: Array[Byte] = _
 
+  /** the element type when the child is an array, null for a string key */
+  @transient private lazy val elementType: DataType = child.dataType match {
+    case ArrayType(et, _) => et
+    case _ => null
+  }
+
   final override def update(buffer: T, input: InternalRow): T = {
     val v = child.eval(input)
     if (v != null) {
-      val u = v.asInstanceOf[UTF8String]
-      val len = u.numBytes()
-      if (scratch == null || scratch.length < len)
-        scratch = new Array[Byte](math.max(64, java.lang.Integer.highestOneBit(len) * 2))
-      u.writeToMemory(scratch, org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET)
-      updateKey(buffer, scratch, len)
+      if (elementType == null) updateString(buffer, v.asInstanceOf[UTF8String])
+      else updateArray(buffer, v.asInstanceOf[ArrayData])
     }
     buffer
+  }
+
+  private def reserve(len: Int): Unit =
+    if (scratch == null || scratch.length < len)
+      scratch = new Array[Byte](math.max(64, java.lang.Integer.highestOneBit(len) * 2))
+
+  private def updateString(buffer: T, u: UTF8String): Unit = {
+    val len = u.numBytes()
+    reserve(len)
+    u.writeToMemory(scratch, Platform.BYTE_ARRAY_OFFSET)
+    updateKey(buffer, scratch, len)
+  }
+
+  private def updateArray(buffer: T, a: ArrayData): Unit = {
+    val n = a.numElements()
+    reserve(DecimalKey.MaxLen)
+    var i = 0
+    elementType match {
+      case _: StringType =>
+        while (i < n) { if (!a.isNullAt(i)) updateString(buffer, a.getUTF8String(i)); i += 1 }
+      case IntegerType =>
+        while (i < n) { if (!a.isNullAt(i)) updateKey(buffer, scratch, DecimalKey.write(a.getInt(i), scratch)); i += 1 }
+      case LongType =>
+        while (i < n) { if (!a.isNullAt(i)) updateKey(buffer, scratch, DecimalKey.write(a.getLong(i), scratch)); i += 1 }
+      case ShortType =>
+        while (i < n) { if (!a.isNullAt(i)) updateKey(buffer, scratch, DecimalKey.write(a.getShort(i).toInt, scratch)); i += 1 }
+      case ByteType =>
+        while (i < n) { if (!a.isNullAt(i)) updateKey(buffer, scratch, DecimalKey.write(a.getByte(i).toInt, scratch)); i += 1 }
+    }
+  }
+}
+
+object KeyedSketchAgg {
+  /** array elements a keyed sketch takes in place of exploded string keys */
+  def isKeyElement(dt: DataType): Boolean = dt match {
+    case _: StringType | ByteType | ShortType | IntegerType | LongType => true
+    case _ => false
+  }
+}
+
+/** Decimal ASCII of an integer, written at the front of a buffer: the
+  * bytes `Cast(x AS STRING)` produces, without the String and the
+  * UTF8String copy. Two digits per division, in int arithmetic except
+  * for the high digits of a long beyond the int range (the
+  * `Integer.getChars` technique; works on the negated value so that
+  * MinValue needs no special case). */
+private[agg] object DecimalKey {
+  /** longest output: "-9223372036854775808" */
+  val MaxLen = 20
+
+  // "00" "01" ... "99": the two digits of pair p at 2p and 2p + 1
+  private val Pairs: Array[Byte] =
+    Array.tabulate(200)(i => ('0' + (if (i % 2 == 0) i / 20 else i / 2 % 10)).toByte)
+
+  /** writes v's digits to buf(0 until len) and returns len */
+  def write(v: Int, buf: Array[Byte]): Int = {
+    val neg = if (v < 0) v else -v
+    val len = digits(neg) + (if (v < 0) 1 else 0)
+    fill(neg, buf, len)
+    if (v < 0) buf(0) = '-'
+    len
+  }
+
+  def write(v: Long, buf: Array[Byte]): Int = {
+    if (v.toInt == v) return write(v.toInt, buf)
+    var neg = if (v < 0) v else -v
+    val len = digits(neg) + (if (v < 0) 1 else 0)
+    var end = len
+    while (neg < Int.MinValue) {
+      val q = neg / 100
+      val r = (q * 100 - neg).toInt * 2
+      neg = q
+      end -= 2
+      buf(end) = Pairs(r)
+      buf(end + 1) = Pairs(r + 1)
+    }
+    fill(neg.toInt, buf, end)
+    if (v < 0) buf(0) = '-'
+    len
+  }
+
+  /** digits of -neg (neg <= 0), ending just before buf(end) */
+  private def fill(neg0: Int, buf: Array[Byte], end0: Int): Unit = {
+    var neg = neg0
+    var end = end0
+    while (neg <= -100) {
+      val q = neg / 100
+      val r = (q * 100 - neg) * 2
+      neg = q
+      end -= 2
+      buf(end) = Pairs(r)
+      buf(end + 1) = Pairs(r + 1)
+    }
+    if (neg <= -10) {
+      buf(end - 2) = Pairs(-neg * 2)
+      buf(end - 1) = Pairs(-neg * 2 + 1)
+    } else buf(end - 1) = ('0' - neg).toByte
+  }
+
+  /** number of decimal digits of -neg (neg <= 0) */
+  private def digits(neg: Int): Int = {
+    var d = 1
+    var p = -10
+    while (d < 10 && neg <= p) { d += 1; p *= 10 }
+    d
+  }
+
+  private def digits(neg: Long): Int = {
+    var d = 1
+    var p = -10L
+    while (d < 19 && neg <= p) { d += 1; p *= 10 }
+    d
   }
 }
 

@@ -69,8 +69,7 @@ object Bpe {
         var i = 0
         while (i + 1 < parts.length) {
           val k = (parts(i), parts(i + 1))
-          val prev = counts.get(k)
-          counts.put(k, (if (prev == null) 0L else prev.longValue()) + cnt)
+          counts.put(k, counts.getOrDefault(k, 0L) + cnt)
           i += 1
         }
       }

@@ -3,15 +3,23 @@ package graft.agg
 import org.scalatest.funsuite.AnyFunSuite
 
 /**
- * The `spark.sql.extensions` cluster install path, tested for real:
- * extensions are applied only when a SparkSession is CONSTRUCTED, so
- * the shared test session can't exercise them — this spec forks a
- * fresh JVM running [[graft.ExtensionsSmoke]], whose session is built
- * with the config and uses `graft_*` SQL with no register() call.
+ * The cluster install paths, tested for real: extensions are applied
+ * only when a SparkSession is CONSTRUCTED, so the shared test session
+ * can't exercise them — this spec forks a fresh JVM running
+ * [[graft.ExtensionsSmoke]], whose session uses `graft_*` SQL with no
+ * register() call and must fuse explode into the sketch aggregates.
  */
 class ExtensionsInstallSpec extends AnyFunSuite {
 
   test("a fresh session with spark.sql.extensions=GraftExtensions serves graft_* SQL unregistered") {
+    smoke("config")
+  }
+
+  test("a fresh session with no configuration gets GraftExtensions from the jar's service file") {
+    smoke()
+  }
+
+  private def smoke(args: String*): Unit = {
     val javaBin = System.getProperty("java.home") + "/bin/java"
     val addOpens = Seq(
       "java.base/java.lang", "java.base/java.lang.invoke",
@@ -25,7 +33,7 @@ class ExtensionsInstallSpec extends AnyFunSuite {
     val cp = Seq("target/scala-2.13/classes",
       sys.props("java.class.path")).mkString(java.io.File.pathSeparator)
     val cmd = (Seq(javaBin) ++ addOpens ++
-      Seq("-Xmx2g", "-cp", cp, "graft.ExtensionsSmoke")).toList
+      Seq("-Xmx2g", "-cp", cp, "graft.ExtensionsSmoke") ++ args).toList
     val pb = new ProcessBuilder(cmd: _*)
     pb.redirectErrorStream(true)
     val proc = pb.start()
