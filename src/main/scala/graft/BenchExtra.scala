@@ -1,15 +1,13 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /**
- * Round-6 optimization harness (NOT part of the driver contract —
- * `Bench.scala` stays the artifact of record, untouched). Times a
- * subset of `SparkEntry.queries` under the exact session config the
- * driver's bench uses (same master, shuffle partitions, AQE, scan
- * split sizing), with optional repeats and plan capture, so a change
- * can be measured in isolation without paying the full bench's
- * materialize + set/check + scaling sections.
+ * Gate harness, the one tool that times gates and captures their plans
+ * (NOT part of the driver contract — `Bench.scala` stays the artifact
+ * of record, untouched). Times a subset of `SparkEntry.queries` under
+ * the exact session config the driver's bench uses (same master,
+ * shuffle partitions, AQE, scan split sizing), with optional repeats
+ * and plan capture, so a change can be measured in isolation without
+ * paying the full bench's materialize + set/check + scaling sections.
  *
  *   runMain graft.BenchExtra <q1,q2,...|all> [repeats] [planDir]
  *
@@ -24,17 +22,13 @@ object BenchExtra {
     val repeats = if (args.length > 1) args(1).toInt else 2
     val planDir = if (args.length > 2) Some(args(2)) else None
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
+    val cpus = LocalSpark.cpus
+    val spark = LocalSpark.builder(cpus)
       .appName(s"graft-benchextra-$cpus")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.files.maxPartitionBytes", "8m")
       .config("spark.sql.files.openCostInBytes", "0")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
     val all = SparkEntry.queries
     val picked =
       if (names == "all") all.toSeq.sortBy(_._1)

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.plans.logical.Generate
 
 /**
@@ -11,8 +10,8 @@ import org.apache.spark.sql.catalyst.plans.logical.Generate
  * consume the library — and its optimizer fuses `explode` into the
  * sketch aggregates ([[graft.agg.SketchOverExplode]]).
  *
- * With no argument the session is built with no configuration at all
- * (Spark's ServiceLoader installs `GraftExtensions`); with `config` it
+ * With no argument the session sets no `spark.sql.extensions` (Spark's
+ * ServiceLoader installs `GraftExtensions`); with `config` it
  * also sets `spark.sql.extensions=graft.agg.GraftExtensions`, so both
  * install paths are active at once. Run by `ExtensionsInstallSpec` as a
  * forked process (extensions only apply at session construction, so an
@@ -24,14 +23,10 @@ object ExtensionsSmoke {
     // non-daemon Spark threads holding the forked JVM open (the spec
     // reads this process's output to EOF)
     try {
-      val builder = SparkSession.builder()
-        .master("local[2]")
-        .config("spark.sql.shuffle.partitions", "2")
-        .config("spark.ui.enabled", "false")
+      val builder = LocalSpark.builder(2)
       if (args.headOption.contains("config"))
         builder.config("spark.sql.extensions", "graft.agg.GraftExtensions")
       val spark = builder.getOrCreate()
-      spark.sparkContext.setLogLevel("WARN")
       val row = spark.sql(
         "SELECT graft_bloom_contains(graft_bloom_agg(k, 20000, 0.001), 'k3') AS hit, " +
           "graft_bloom_contains(graft_bloom_agg(k, 20000, 0.001), 'absent') AS miss, " +

@@ -23,16 +23,9 @@ import org.apache.spark.sql.functions._
 object GenData {
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .appName("graft-gendata")
-      .getOrCreate()
-    run(spark, args(0), args(1), if (args.length > 2) args(2).toInt else 10,
-      cpus.toInt)
+    val cpus = LocalSpark.cpus
+    val spark = LocalSpark.builder(cpus).getOrCreate()
+    run(spark, args(0), args(1), if (args.length > 2) args(2).toInt else 10, cpus)
     spark.stop()
   }
 

@@ -1,16 +1,9 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Driver-parity smoke: runs SparkEntry.entry and prints its rows. */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSpark.builder(8).getOrCreate()
     val df = SparkEntry.entry(spark)
     df.show(50, truncate = false)
     println(s"entry rows=${df.count()}")

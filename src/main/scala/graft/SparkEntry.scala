@@ -37,10 +37,7 @@ object SparkEntry {
     // bloom `bulk`+`check`: zero false negatives over every inserted
     // (source, token) pair — `csrc/libbloom/bloom.c:105-150` semantics
     "bloom_member_tokens" -> ((s, dir) => {
-      // the sketch build and the probe side both scan the tokenization
-      // (an explode + vocab lookup per word) - materialize it once per
-      // invocation, recomputed from parquet every run
-      val toks = TokenTable.tokens(s, dir).localCheckpoint(true)
+      val toks = TokenTable.tokens(s, dir)
       val sketches = toks.groupBy("source")
         .agg(bloom_agg(col("token").cast("string"), 100000L, 1e-4).as("sketch"))
       toks.select("source", "token").distinct()

@@ -59,12 +59,11 @@ class CWireServer(val catalog: SketchCatalog) {
                        op: (String, String) => Either[String, Boolean]): String =
     args match {
       case name :: keys if keys.nonEmpty =>
+        // the first error answers the command: the filter can be
+        // dropped between two of its keys
         val results = keys.map(op(name, _))
-        results.head match {
-          case Left(err) => err + "\n"
-          case Right(_) =>
-            results.map(r => yesNo(r.toOption.get)).mkString(" ") + "\n"
-        }
+        results.collectFirst { case Left(err) => err + "\n" }
+          .getOrElse(results.collect { case Right(b) => yesNo(b) }.mkString(" ") + "\n")
       case _ => clientErr("Must provide filter name and key")
     }
 

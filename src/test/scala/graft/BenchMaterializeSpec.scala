@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The bench materializer must keep its chunky many-file layout at
@@ -12,13 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * (replica x slice) grid decouples write parallelism from the
   * replica count; this spec pins both the layout and the exact
   * row-count contract in the low-replica regime. */
-class BenchMaterializeSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class BenchMaterializeSpec extends AnyFunSuite with SharedSpark {
 
   test("low-replica materialize still writes a many-file balanced layout") {
     import org.apache.spark.sql.functions._

@@ -1,19 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The scale-decade generator must be a pure function of (src,
   * factor): two runs produce byte-identical tables, word choice is
   * hash-mixed (no degenerate trigram universe), and planted near-dups
   * exist. Guards the reproducibility claim of the sf1 artifacts. */
-class GenDataSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class GenDataSpec extends AnyFunSuite with SharedSpark {
 
   test("GenData is deterministic, hash-mixed, and plants near-dups") {
     import org.apache.spark.sql.functions._

@@ -1,0 +1,42 @@
+package graft
+
+import org.scalatest.funsuite.AnyFunSuite
+import java.nio.file.{Files, Path, Paths}
+import scala.jdk.CollectionConverters._
+
+/**
+ * Keeps one session factory: every session outside the driver contract
+ * comes from `LocalSpark`, and every suite session conf goes through
+ * `SharedSpark.withConf`, so no setting leaks into the suites that run
+ * after it in the shared test JVM.
+ */
+class OneSessionFactorySpec extends AnyFunSuite {
+
+  private def sources(root: String): Seq[Path] = {
+    val walk = Files.walk(Paths.get(root))
+    try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq.sorted
+    finally walk.close()
+  }
+
+  private def offenders(root: String, pattern: String, allowed: Set[String]): Seq[String] =
+    sources(root).filterNot(p => allowed(p.getFileName.toString)).flatMap { p =>
+      Files.readAllLines(p).asScala.zipWithIndex.collect {
+        case (line, i) if pattern.r.findFirstIn(line).isDefined => s"$p:${i + 1}: ${line.trim}"
+      }
+    }
+
+  test("only LocalSpark, Bench and Verify build a SparkSession") {
+    val found = offenders("src", """SparkSession\s*\.\s*builder""",
+      Set("LocalSpark.scala", "Bench.scala", "Verify.scala"))
+    assert(found.isEmpty, found.mkString("\n", "\n", ""))
+  }
+
+  test("suites set session confs only through withConf") {
+    val setters = Seq(
+      """\bconf\s*\.\s*(set|unset)\s*\(""", // spark.conf.set / unset
+      """\.config\s*\(""", // a builder conf on the shared session
+      """\bsql\s*\(\s*"+\s*(?i:set|reset)\b""") // SQL SET / RESET
+    val found = offenders("src/test", setters.mkString("|"), Set("SharedSpark.scala"))
+    assert(found.isEmpty, found.mkString("\n", "\n", ""))
+  }
+}

@@ -2,19 +2,12 @@ package graft.agg
 
 import graft.sketch.{BloomFilter, BloomParams}
 import graft.agg.GraftFunctions._
-import org.apache.spark.sql.SparkSession
+import graft.SharedSpark
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.charset.StandardCharsets.UTF_8
 
-class AggSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
+class AggSpec extends AnyFunSuite with SharedSpark {
 
   test("distributed bloom_agg bit array EXACTLY equals sequential reference filter") {
     import spark.implicits._
@@ -74,12 +67,6 @@ class AggSpec extends AnyFunSuite {
         |SELECT sum(CASE WHEN graft_bloom_contains(s, k) THEN 0 ELSE 1 END) AS fn
         |FROM ins, sk""".stripMargin).head().getLong(0)
     assert(fn == 0)
-  }
-
-  private def withConf[A](kv: (String, String)*)(f: => A): A = {
-    val old = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
-    kv.foreach { case (k, v) => spark.conf.set(k, v) }
-    try f finally old.foreach { case (k, o) => o.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
   }
 
   test("sketch_ref probe: generated and interpreted code give the same answers, null key answers null") {

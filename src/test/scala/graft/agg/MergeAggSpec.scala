@@ -1,8 +1,9 @@
 package graft.agg
 
+import graft.SharedSpark
 import graft.sketch._
 import graft.agg.GraftFunctions._
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{BinaryType, StructField, StructType}
 import org.scalatest.funsuite.AnyFunSuite
@@ -15,14 +16,7 @@ import java.nio.charset.StandardCharsets.UTF_8
  * byte and with a single-pass build — byte-exact for the families whose
  * merge is order-free, within the family's guarantee for the rest.
  */
-class MergeAggSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
+class MergeAggSpec extends AnyFunSuite with SharedSpark {
 
   private val n = 6000
   private val groups = 7

@@ -1,7 +1,8 @@
 package graft.agg
 
+import graft.SharedSpark
 import graft.agg.GraftFunctions._
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.catalyst.expressions.Cast
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Complete}
 import org.apache.spark.sql.catalyst.plans.logical.Generate
@@ -20,14 +21,7 @@ import java.nio.charset.StandardCharsets.UTF_8
  * has one partial buffer and order-dependent sketches (bloom count,
  * lbf, freq) are comparable too.
  */
-class SketchOverExplodeSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
+class SketchOverExplodeSpec extends AnyFunSuite with SharedSpark {
 
   /** group 9 holds only null and empty arrays: it must stay absent */
   private val EmptyGroup = 9
@@ -68,10 +62,8 @@ class SketchOverExplodeSpec extends AnyFunSuite {
     spark.read.parquet(tableDir)
   }
 
-  private def withoutRule[T](f: => T): T = {
-    spark.conf.set("spark.sql.optimizer.excludedRules", SketchOverExplode.ruleName)
-    try f finally spark.conf.unset("spark.sql.optimizer.excludedRules")
-  }
+  private def withoutRule[T](f: => T): T =
+    withConf("spark.sql.optimizer.excludedRules" -> SketchOverExplode.ruleName)(f)
 
   private def hasGenerate(df: DataFrame): Boolean =
     df.queryExecution.optimizedPlan.exists(_.isInstanceOf[Generate])

@@ -1,6 +1,6 @@
 package graft.catalog
 
-import org.apache.spark.sql.SparkSession
+import graft.SharedSpark
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
 
@@ -11,13 +11,7 @@ import java.nio.file.Files
  * Driven by manual ticks for determinism; the interval threads call
  * the same sweep.
  */
-class BackgroundSweepSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class BackgroundSweepSpec extends AnyFunSuite with SharedSpark {
 
   test("flush sweep persists dirty filters and skips clean ones") {
     val root = Files.createTempDirectory("bg1")

@@ -1,7 +1,7 @@
 package graft.catalog
 
 import graft.sketch.ScalableBloom
-import org.apache.spark.sql.SparkSession
+import graft.SharedSpark
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
 
@@ -10,13 +10,7 @@ import java.nio.file.Files
  * (`bloomd.<name>/{config.ini, data.NNN.mmap}`, filter.c:435-536):
  * membership, layer order, and the capacity ladder must survive.
  */
-class BloomdRestoreSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class BloomdRestoreSpec extends AnyFunSuite with SharedSpark {
 
   private def writeLayout(src: ScalableBloom, name: String): java.nio.file.Path = {
     val dir = Files.createTempDirectory("restore").resolve(s"bloomd.$name")

@@ -1,18 +1,12 @@
 package graft.catalog
 
-import org.apache.spark.sql.SparkSession
+import graft.SharedSpark
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Replays a composite of the C daemon's integration-test goldens
   * (`/root/reference/integ/test_integ.py:74-278`) over the line
   * protocol, asserting exact `\n`-terminated responses. */
-class CWireSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class CWireSpec extends AnyFunSuite with SharedSpark {
 
   test("C wire protocol: composite integ golden trace") {
     val dir = java.nio.file.Files.createTempDirectory("cwire").toString
@@ -80,5 +74,22 @@ class CWireSpec extends AnyFunSuite {
     assert(info.contains("in_memory 1\n"), info)
     assert(info.contains("probability 0.000100\n"), info)
     assert(info.startsWith("START\ncapacity 100000\n") && info.endsWith("END\n"), info)
+  }
+
+  test("multi and bulk answer the filter's error when it is dropped mid-command") {
+    val dir = java.nio.file.Files.createTempDirectory("cwiredrop").toString
+    // every key op drops its filter once it has answered, so the first
+    // key of a multi-key command is answered and the next finds it gone
+    val cat = new SketchCatalog(spark, dir) {
+      override def checkKeyLocal(name: String, key: String): Either[String, Boolean] =
+        try super.checkKeyLocal(name, key) finally drop(name)
+      override def setKeyLocal(name: String, key: String): Either[String, Boolean] =
+        try super.setKeyLocal(name, key) finally drop(name)
+    }
+    val srv = new CWireServer(cat)
+    assert(srv.interpret("create f") == "Done\n")
+    assert(srv.interpret("m f a b") == "Filter does not exist\n")
+    assert(srv.interpret("create g") == "Done\n")
+    assert(srv.interpret("b g a b") == "Filter does not exist\n")
   }
 }

@@ -1,6 +1,7 @@
 package graft.catalog
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.SharedSpark
+import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
 
@@ -8,13 +9,7 @@ import java.nio.file.Files
  * Lifecycle parity with the reference wire protocol
  * (`integ/test_integ.py:74-278`, `tests/bloomd/test_filtmgr.c`).
  */
-class CatalogSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class CatalogSpec extends AnyFunSuite with SharedSpark {
 
   private def freshCatalog(): SketchCatalog =
     new SketchCatalog(spark, Files.createTempDirectory("graftcat").toString)

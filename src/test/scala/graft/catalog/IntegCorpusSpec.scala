@@ -1,6 +1,6 @@
 package graft.catalog
 
-import org.apache.spark.sql.SparkSession
+import graft.SharedSpark
 import org.scalatest.funsuite.AnyFunSuite
 
 /**
@@ -11,13 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
  * concurrency half of the corpus (:280-373) lives in
  * [[WireConcurrencySpec]]; this file is the sequential half.
  */
-class IntegCorpusSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class IntegCorpusSpec extends AnyFunSuite with SharedSpark {
 
   /** fresh catalog + TCP server + client session, like the fixture */
   private def scenario[A](f: (String => String, SketchCatalog) => A): A = {

@@ -1,6 +1,6 @@
 package graft.catalog
 
-import org.apache.spark.sql.SparkSession
+import graft.SharedSpark
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
 import java.util.concurrent.CountDownLatch
@@ -10,13 +10,7 @@ import java.util.concurrent.CountDownLatch
  * off the command path; `create` of a name whose files are still
  * being deleted answers "Delete in progress".
  */
-class PendingDeleteSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class PendingDeleteSpec extends AnyFunSuite with SharedSpark {
 
   test("create during an in-flight drop answers Delete in progress") {
     val cat = new SketchCatalog(spark, Files.createTempDirectory("pend").toString)

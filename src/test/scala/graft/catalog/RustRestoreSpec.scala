@@ -1,5 +1,6 @@
 package graft.catalog
 
+import graft.SharedSpark
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
 
@@ -8,7 +9,7 @@ import java.nio.file.Files
  * (`filter.<name>/{<name>.ini, N.bmp}`, wrappers.rs + config.rs):
  * counting semantics and counters must survive the migration.
  */
-class RustRestoreSpec extends AnyFunSuite {
+class RustRestoreSpec extends AnyFunSuite with SharedSpark {
 
   test("counting filter round-trips through the Rust directory layout") {
     // build multiplicities 3/2/1 through the real server
@@ -90,8 +91,6 @@ class RustRestoreSpec extends AnyFunSuite {
   }
 
   test("listCold clears hot flags and defines sweep windows") {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[2]").config("spark.ui.enabled", "false").getOrCreate()
     val cat = new SketchCatalog(spark, Files.createTempDirectory("coldlist").toString)
     cat.create("a"); cat.create("b")
     assert(cat.listCold() == Seq.empty) // both creation-hot

@@ -1,6 +1,6 @@
 package graft.catalog
 
-import org.apache.spark.sql.SparkSession
+import graft.SharedSpark
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.{Files, Paths}
 
@@ -15,13 +15,7 @@ import java.nio.file.{Files, Paths}
  * round-trip specs approximate: the bytes we write are accepted by
  * the reference implementation, not just by our own reader.
  */
-class ServeBackSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class ServeBackSpec extends AnyFunSuite with SharedSpark {
 
   private def freePort(): Int = {
     val s = new java.net.ServerSocket(0)

@@ -1,18 +1,12 @@
 package graft.catalog
 
-import org.apache.spark.sql.SparkSession
+import graft.SharedSpark
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
 
 /** Snapshot-commit protocol: optimistic version claiming + manifest
   * publishing must not lose snapshots under collisions. */
-class SketchTableIOSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class SketchTableIOSpec extends AnyFunSuite with SharedSpark {
 
   test("commit claims the next free version when a data dir is squatted") {
     import spark.implicits._

@@ -1,16 +1,10 @@
 package graft.catalog
 
-import org.apache.spark.sql.SparkSession
+import graft.SharedSpark
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Snapshot isolation + time travel of the Iceberg-layout seam. */
-class SnapshotSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class SnapshotSpec extends AnyFunSuite with SharedSpark {
 
   test("commits are immutable snapshots; time travel reads exactly the committed files") {
     import spark.implicits._

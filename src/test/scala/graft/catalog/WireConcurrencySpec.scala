@@ -1,6 +1,6 @@
 package graft.catalog
 
-import org.apache.spark.sql.SparkSession
+import graft.SharedSpark
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -29,13 +29,7 @@ object ReadGate {
  * drop/flush/create across REAL TCP connections see only the
  * reference's legal responses.
  */
-class WireConcurrencySpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class WireConcurrencySpec extends AnyFunSuite with SharedSpark {
 
   private def newCatalog(): SketchCatalog =
     new SketchCatalog(spark, java.nio.file.Files.createTempDirectory("wirecc").toString)

@@ -1,6 +1,6 @@
 package graft.catalog
 
-import org.apache.spark.sql.SparkSession
+import graft.SharedSpark
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
 
@@ -9,13 +9,7 @@ import java.nio.file.Files
  * tests' startup contract (`integ/test_integ.py:19-71`: connect,
  * send newline-terminated commands, read line / START..END block).
  */
-class WireTcpSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class WireTcpSpec extends AnyFunSuite with SharedSpark {
 
   private def withServer[A](handler: String => String)(f: Int => A): A = {
     val srv = new WireTcpServer(handler)

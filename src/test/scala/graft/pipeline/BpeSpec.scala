@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
+import graft.SharedSpark
 import org.scalatest.funsuite.AnyFunSuite
 
 /**
@@ -8,13 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
  * to trace by eye, including the tie-break order and the documented
  * single-pass replace semantics on adjacent overlapping pairs.
  */
-class BpeSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class BpeSpec extends AnyFunSuite with SharedSpark {
 
   private def corpus(texts: String*) = {
     import spark.implicits._

@@ -1,19 +1,13 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.SharedSpark
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Corpus-audit operators: the cross-source duplication overlap
   * matrix and the one-pass per-source datacard. */
-class DatacardSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
+class DatacardSpec extends AnyFunSuite with SharedSpark {
 
   import spark.implicits._
 

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
+import graft.SharedSpark
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -10,13 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
  * the capped n-gram Jaccard must compute J over the surviving
  * universe on both sides.
  */
-class DedupParitySpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class DedupParitySpec extends AnyFunSuite with SharedSpark {
 
   private def emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
 

@@ -2,7 +2,7 @@ package graft.pipeline
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
+import graft.SharedSpark
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -13,13 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
  * lists, and actual scan-output row counts (row-group skipping) on
  * sorted vs shuffled layouts of the SAME data.
  */
-class LayoutSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class LayoutSpec extends AnyFunSuite with SharedSpark {
 
   test("bucketed join runs with zero exchanges and matches the plain join") {
     import spark.implicits._

@@ -1,19 +1,13 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
+import graft.SharedSpark
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.{Files, Paths}
 
 /** The lineage journal must carry per-partition task metrics (the
   * north rule's "per-partition lineage + metrics logged"). */
-class LineageSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class LineageSpec extends AnyFunSuite with SharedSpark {
 
   test("journal lines carry rows + per-partition records/bytes/runtime") {
     val tmp = Files.createTempDirectory("lineage")

@@ -1,18 +1,12 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
+import graft.SharedSpark
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Bigram-LM filter on a hand-computable corpus: exact counts, the
   * cross-multiplied rarity rule, the per-mille floor, degenerate-doc
   * exclusion, and the float perplexity against a closed form. */
-class LmFilterSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class LmFilterSpec extends AnyFunSuite with SharedSpark {
 
   // reference "a b a b c": c2 = {a b: 2, b a: 1, b c: 1},
   // c1 = {a: 2, b: 2}, V = |{a,b,c}| = 3

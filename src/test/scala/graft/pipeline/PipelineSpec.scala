@@ -1,19 +1,12 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
+import graft.SharedSpark
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Dedup / ANN / text / multimodal pipeline operators over the
   * deterministic sandbox corpus at sf0.001. */
-class PipelineSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
+class PipelineSpec extends AnyFunSuite with SharedSpark {
 
   private val dir = "/root/testdata/sf0.001"
   private def docs = spark.read.parquet(s"$dir/documents.parquet")
@@ -447,12 +440,11 @@ class PipelineSpec extends AnyFunSuite {
     // turn coalescing off for the task-count probe. The probe walks
     // the RDD (a bare select(spark_partition_id()) would let Catalyst
     // prune the whole window away and report the scan's partitioning)
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
-    val partsUsed =
-      try packed.rdd.mapPartitionsWithIndex { case (i, it) =>
+    val partsUsed = withConf("spark.sql.adaptive.coalescePartitions.enabled" -> "false") {
+      packed.rdd.mapPartitionsWithIndex { case (i, it) =>
         if (it.hasNext) Iterator(i) else Iterator.empty
       }.collect().length
-      finally spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
+    }
     assert(partsUsed > 1, s"single-source pack still ran in $partsUsed task")
     // bitwise parity with the naive single-window formula
     val w = Window.partitionBy("source").orderBy("doc_id")

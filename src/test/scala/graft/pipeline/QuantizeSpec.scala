@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
+import graft.SharedSpark
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -8,13 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * per-component reconstruction bound, the all-zero edge, and
   * quantized-ranking agreement with exact cosine when the margin
   * dwarfs the quantization error. */
-class QuantizeSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class QuantizeSpec extends AnyFunSuite with SharedSpark {
 
   private def embDF(rows: Seq[(Long, Array[Float])]) = {
     import spark.implicits._

@@ -2,19 +2,13 @@ package graft.pipeline
 
 import graft.agg.GraftFunctions._
 import graft.sketch.BloomFilter
-import org.apache.spark.sql.SparkSession
+import graft.SharedSpark
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Kill/resume contract of the checkpointed sketch build, and the
   * merge (rollup) aggregates it relies on. */
-class ResumeSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class ResumeSpec extends AnyFunSuite with SharedSpark {
 
   private val dir = "/root/testdata/sf0.001"
 

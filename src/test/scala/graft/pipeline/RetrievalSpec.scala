@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
+import graft.SharedSpark
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -12,13 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
  * the executed plan is the scale shape: broadcast joins on the query
  * side + a map-side WindowGroupLimit capping the rank exchange.
  */
-class RetrievalSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class RetrievalSpec extends AnyFunSuite with SharedSpark {
 
   private def corpus = {
     import spark.implicits._

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
+import graft.SharedSpark
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -9,13 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
  * controlled two-vocabulary corpus, partitioning invariance, and the
  * broadcast plan shape (the model must never shuffle the pool).
  */
-class SelectionSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class SelectionSpec extends AnyFunSuite with SharedSpark {
 
   /** corpus: 10 identical target docs over vocabulary A, 2 pool docs
     * over A (target-affine), 8 pool docs over disjoint vocabulary B.

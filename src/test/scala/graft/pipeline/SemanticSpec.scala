@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
+import graft.SharedSpark
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -11,13 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
  * a twin is a tiny perturbation; the gate's soundness/completeness
  * booleans hold; two runs are identical (deterministic quantizer).
  */
-class SemanticSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class SemanticSpec extends AnyFunSuite with SharedSpark {
 
   private def emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
 

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
+import graft.SharedSpark
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -10,13 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
  * survives, every other occurrence's [pos, pos+L) positions are cut,
  * and the cut is the token-granular UNION of a doc's flagged windows.
  */
-class SubstringDedupSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class SubstringDedupSpec extends AnyFunSuite with SharedSpark {
 
   private def tokTable(rows: Seq[(Long, Seq[Int])]) = {
     import spark.implicits._

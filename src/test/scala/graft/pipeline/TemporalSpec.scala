@@ -2,7 +2,7 @@ package graft.pipeline
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.SparkSession
+import graft.SharedSpark
 import org.scalatest.funsuite.AnyFunSuite
 
 /**
@@ -12,14 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
  * shuffle for the as-of join (the scalable union+window shape; a
  * range-join rewrite would show two exchanges + a join).
  */
-class TemporalSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class TemporalSpec extends AnyFunSuite with SharedSpark {
 
   private def ts(sec: Long) = new Timestamp(sec * 1000L)
 

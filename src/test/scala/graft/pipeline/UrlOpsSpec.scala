@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
+import graft.SharedSpark
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -10,13 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * from first/middle/last positions without orphaning separators,
   * path case and parameter order must be preserved, and the chain
   * must be idempotent (normalizing a canonical URL is a no-op). */
-class UrlOpsSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class UrlOpsSpec extends AnyFunSuite with SharedSpark {
 
   private def norm(u: String): String = {
     import spark.implicits._

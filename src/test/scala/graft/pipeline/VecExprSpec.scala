@@ -1,19 +1,13 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
+import graft.SharedSpark
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Native vector expressions: the one-pass LSH bucketing must equal
   * the column-composed definition bit-for-bit; the vector-sum
   * aggregate must equal the posexplode/groupBy shape it replaces. */
-class VecExprSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class VecExprSpec extends AnyFunSuite with SharedSpark {
 
   private def emb = spark.read
     .parquet("/root/testdata/sf0.001/embeddings.parquet")

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
+import graft.SharedSpark
 import org.scalatest.funsuite.AnyFunSuite
 
 /**
@@ -8,14 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
  * symmetric join state, inclusive window boundaries, and no pairs
  * outside the window — on a hand-built file-at-a-time replay.
  */
-class StreamJoinsSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class StreamJoinsSpec extends AnyFunSuite with SharedSpark {
 
   private def ts(h: Int, m: Int) = java.sql.Timestamp.from(
     java.time.LocalDateTime.of(2026, 1, 1, h, m, 0)

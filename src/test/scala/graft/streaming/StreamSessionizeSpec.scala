@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
+import graft.SharedSpark
 import org.scalatest.funsuite.AnyFunSuite
 
 /**
@@ -9,14 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
  * (event at prev + gap EXTENDS — break is strictly `> gap`), and
  * the sentinel-driven flush of still-open sessions.
  */
-class StreamSessionizeSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class StreamSessionizeSpec extends AnyFunSuite with SharedSpark {
 
   private def ts(h: Int, m: Int) = java.sql.Timestamp.from(
     java.time.LocalDateTime.of(2026, 1, 1, h, m, 0)

@@ -1,17 +1,11 @@
 package graft.streaming
 
 import graft.pipeline.TokenTable
-import org.apache.spark.sql.SparkSession
+import graft.SharedSpark
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Streaming-equals-batch contract for incremental sketch maintenance. */
-class StreamSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class StreamSpec extends AnyFunSuite with SharedSpark {
 
   test("changelog sink is idempotent per batch id (foreachBatch retry cannot duplicate rows)") {
     import spark.implicits._
@@ -128,48 +122,49 @@ class StreamSpec extends AnyFunSuite {
   }
 
   test("dedupWithinWatermark: horizon-bounded state drops near dups, re-admits expired digests") {
-    import spark.implicits._
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    val tmp = java.nio.file.Files.createTempDirectory("wmdedup")
-    val in = tmp.resolve("in")
-    java.nio.file.Files.createDirectories(in)
-    // one row per FILE, one file per trigger, mtimes pinned ascending:
-    // arrival order and watermark advancement are fully deterministic
-    def hour(h: Int, m: Int) = java.sql.Timestamp.valueOf(f"2026-01-01 $h%02d:$m%02d:00")
-    // State eviction runs at batch COMMIT (after the batch's rows are
-    // checked), and the watermark a batch uses is derived from the
-    // PREVIOUS batch's max event time — so alpha's digest (expiry
-    // <= 10:35) is evicted at the end of the first batch whose
-    // watermark passed it (doc 4's: wm = 11:10 - 30m = 10:40), and a
-    // re-arrival is admitted from the NEXT batch on.
-    val rows = Seq(
-      (1L, "alpha text", hour(10, 0)),   // first sight of alpha
-      (2L, "alpha text", hour(10, 5)),   // near dup inside the 30m horizon -> dropped
-      (3L, "filler doc", hour(11, 10)),  // advances the watermark source
-      (4L, "filler two", hour(11, 15)),  // batch wm 10:40 -> alpha evicted at commit
-      (5L, "alpha text", hour(11, 30))   // horizon long passed -> re-admitted
-    )
-    rows.zipWithIndex.foreach { case ((id, text, ts), i) =>
-      val stage = tmp.resolve(s"stage$i")
-      Seq((id, text, ts)).toDF("doc_id", "text", "ts")
-        .coalesce(1).write.mode("overwrite").parquet(stage.toString)
-      val part = java.nio.file.Files.list(stage).iterator()
-      while (part.hasNext) {
-        val p = part.next()
-        if (p.toString.endsWith(".parquet")) {
-          val dst = in.resolve(f"file$i%03d.parquet")
-          java.nio.file.Files.copy(p, dst)
-          java.nio.file.Files.setLastModifiedTime(dst,
-            java.nio.file.attribute.FileTime.fromMillis(1000000000000L + i * 60000L))
+    withConf("spark.sql.session.timeZone" -> "UTC") {
+      import spark.implicits._
+      val tmp = java.nio.file.Files.createTempDirectory("wmdedup")
+      val in = tmp.resolve("in")
+      java.nio.file.Files.createDirectories(in)
+      // one row per FILE, one file per trigger, mtimes pinned ascending:
+      // arrival order and watermark advancement are fully deterministic
+      def hour(h: Int, m: Int) = java.sql.Timestamp.valueOf(f"2026-01-01 $h%02d:$m%02d:00")
+      // State eviction runs at batch COMMIT (after the batch's rows are
+      // checked), and the watermark a batch uses is derived from the
+      // PREVIOUS batch's max event time — so alpha's digest (expiry
+      // <= 10:35) is evicted at the end of the first batch whose
+      // watermark passed it (doc 4's: wm = 11:10 - 30m = 10:40), and a
+      // re-arrival is admitted from the NEXT batch on.
+      val rows = Seq(
+        (1L, "alpha text", hour(10, 0)),   // first sight of alpha
+        (2L, "alpha text", hour(10, 5)),   // near dup inside the 30m horizon -> dropped
+        (3L, "filler doc", hour(11, 10)),  // advances the watermark source
+        (4L, "filler two", hour(11, 15)),  // batch wm 10:40 -> alpha evicted at commit
+        (5L, "alpha text", hour(11, 30))   // horizon long passed -> re-admitted
+      )
+      rows.zipWithIndex.foreach { case ((id, text, ts), i) =>
+        val stage = tmp.resolve(s"stage$i")
+        Seq((id, text, ts)).toDF("doc_id", "text", "ts")
+          .coalesce(1).write.mode("overwrite").parquet(stage.toString)
+        val part = java.nio.file.Files.list(stage).iterator()
+        while (part.hasNext) {
+          val p = part.next()
+          if (p.toString.endsWith(".parquet")) {
+            val dst = in.resolve(f"file$i%03d.parquet")
+            java.nio.file.Files.copy(p, dst)
+            java.nio.file.Files.setLastModifiedTime(dst,
+              java.nio.file.attribute.FileTime.fromMillis(1000000000000L + i * 60000L))
+          }
         }
       }
+      val kept = StreamDedup.dedupWithinWatermark(spark, in.toString,
+          tmp.resolve("cp").toString, tmp.resolve("out").toString,
+          tsCol = "ts", delay = "30 minutes")
+        .select("doc_id").collect().map(_.getLong(0)).toSet
+      assert(kept == Set(1L, 3L, 4L, 5L),
+        s"expected near-dup 2 dropped and expired alpha 5 re-admitted, got $kept")
     }
-    val kept = StreamDedup.dedupWithinWatermark(spark, in.toString,
-        tmp.resolve("cp").toString, tmp.resolve("out").toString,
-        tsCol = "ts", delay = "30 minutes")
-      .select("doc_id").collect().map(_.getLong(0)).toSet
-    assert(kept == Set(1L, 3L, 4L, 5L),
-      s"expected near-dup 2 dropped and expired alpha 5 re-admitted, got $kept")
   }
 
   test("foreachBatch incremental OR-merge reproduces one-shot batch sketches exactly") {

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.pipeline.{Dedup, TokenTable}
-import org.apache.spark.sql.SparkSession
+import graft.SharedSpark
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -10,13 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
  * same input (shared `cutFlagged`), cut every planted corpus window,
  * and keep corpus-clean docs — across multiple micro-batches.
  */
-class StreamSubstringScrubSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class StreamSubstringScrubSpec extends AnyFunSuite with SharedSpark {
 
   test("stream scrub equals the batch core; plants cut; clean docs kept") {
     val tmp = java.nio.file.Files.createTempDirectory("sssSpec")
