@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.plans.logical.Generate
 /**
  * Proof of the CLUSTER install path: a fresh JVM whose session is
  * built with the library jar on the classpath gets every `graft_*` SQL
- * function WITHOUT any driver-side `GraftFunctions.register()` call —
+ * function WITHOUT any driver-side registration call —
  * the way a Thrift/Connect user that never runs Scala code would
  * consume the library — and its optimizer fuses `explode` into the
  * sketch aggregates ([[graft.agg.SketchOverExplode]]).

@@ -122,12 +122,12 @@ object SparkEntry {
       steps += ((7, "check all inserted", if (chk.filter(!col("present")).count() == 0) "Yes" else "No"))
       steps += ((8, "check absent key",
         if (cat.checkKeys("foo", Seq("absent").toDF("k")).toOption.get.head().getBoolean(1)) "Yes" else "No"))
-      val info = cat.info("foo").toOption.get.head()
-      steps += ((9, "info size", info.getAs[Long]("size").toString))
+      val info = cat.info("foo").toOption.get
+      steps += ((9, "info size", info.size.toString))
       steps += ((10, "info sets/set_hits/set_misses",
-        s"${info.getAs[Long]("sets")}/${info.getAs[Long]("set_hits")}/${info.getAs[Long]("set_misses")}"))
+        s"${info.sets}/${info.set_hits}/${info.set_misses}"))
       steps += ((11, "info checks/check_hits/check_misses",
-        s"${info.getAs[Long]("checks")}/${info.getAs[Long]("check_hits")}/${info.getAs[Long]("check_misses")}"))
+        s"${info.checks}/${info.check_hits}/${info.check_misses}"))
       steps += ((12, "clear before close", cat.clear("foo")))
       steps += ((13, "close", cat.close("foo")))
       steps += ((14, "clear after close", cat.clear("foo")))
@@ -138,13 +138,13 @@ object SparkEntry {
       steps += ((18, "drop again", cat.drop("foo")))
       steps += ((19, "info of dropped",
         cat.info("foo").left.getOrElse("?")))
-      steps += ((20, "list is empty", cat.list().count().toString))
+      steps += ((20, "list is empty", cat.list().size.toString))
       steps.toSeq.toDF("step", "op", "result").orderBy("step")
     }),
 
     // the batch multi-FILTER probe surface: (name, key) pairs routed
-    // to their filters in one distributed union-of-literal-probes job
-    // (never a per-row sketch-column copy); unknown filters answer none
+    // to their filters in one scan against a broadcast map of the
+    // referenced sketches; unknown filters answer none
     "op_multi_filter_check" -> ((s, dir) => {
       import s.implicits._
       val cat = new graft.catalog.SketchCatalog(s,
@@ -223,12 +223,12 @@ object SparkEntry {
       steps += ((8, "cold sweep pages out untouched",
         s"paged_out=${cat.backgroundSweep(flush = false, cold = true)._2}"))
       steps += ((9, "info f2 proxied",
-        cat.info("f2").toOption.get.head().getAs[Int]("in_memory").toString))
+        cat.info("f2").toOption.get.in_memory.toString))
       steps += ((10, "check f2 k1 faults back in",
         if (cat.checkKeyLocal("f2", "k1") == Right(true)) "Yes" else "No"))
-      val i2 = cat.info("f2").toOption.get.head()
+      val i2 = cat.info("f2").toOption.get
       steps += ((11, "info f2 in_memory/page_ins/page_outs",
-        s"${i2.getAs[Int]("in_memory")}/${i2.getAs[Long]("page_ins")}/${i2.getAs[Long]("page_outs")}"))
+        s"${i2.in_memory}/${i2.page_ins}/${i2.page_outs}"))
       steps.toSeq.toDF("step", "op", "result").orderBy("step")
     }),
 
@@ -248,10 +248,9 @@ object SparkEntry {
     }),
 
     // the SQL surface end-to-end: the same engine driven entirely by
-    // SQL text through the graft_* function registry (the
-    // spark.sql.extensions install path exercised by GraftExtensions)
+    // SQL text through the graft_* functions that GraftExtensions
+    // installs in every session
     "q_sql_surface" -> ((s, dir) => {
-      graft.agg.GraftFunctions.register(s)
       // NOT checkpointed (unlike the token-sketch gates): the three
       // graft_toks scans here each feed heavy ObjectHashAggregates,
       // and re-reading the materialized post-explode rows from the

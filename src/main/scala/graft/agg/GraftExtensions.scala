@@ -10,7 +10,7 @@ import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
  * `META-INF/services/org.apache.spark.sql.SparkSessionExtensionsProvider`
  * and applies it to every session it builds, so every session
  * (including Thrift/Connect ones that never run Scala code) gets the
- * `graft_*` SQL functions without a driver-side register() call, and
+ * `graft_*` SQL functions without a driver-side registration call, and
  * its optimizer gets [[SketchOverExplode]].
  *
  * Naming the class in `spark.sql.extensions` as well still works; the

@@ -94,6 +94,13 @@ object GraftFunctions {
     * print `sketch#<id>(<n> bytes)` instead of the blob */
   def sketch_ref(bc: Broadcast[Array[Byte]], bytes: Int): Column = col(SketchRef(bc, bytes))
 
+  /** `blob` broadcast and held by a [[SketchRef]]. The broadcast is not
+    * destroyed here: a lazily consumed plan may read it at any later
+    * time, and Spark's ContextCleaner removes it once no plan that
+    * references it is reachable. */
+  def sketch_ref(spark: SparkSession, blob: Array[Byte]): Column =
+    sketch_ref(spark.sparkContext.broadcast(blob), blob.length)
+
   def bloom_contains(sketch: Column, key: Column): Column = col(BloomContains(ex(sketch), ex(key.cast("string"))))
   def sbf_contains(sketch: Column, key: Column): Column = col(SbfContains(ex(sketch), ex(key.cast("string"))))
   def lbf_count(sketch: Column, key: Column): Column = col(LbfCount(ex(sketch), ex(key.cast("string"))))
@@ -126,8 +133,8 @@ object GraftFunctions {
   }
   private def lit2Int(e: Expression): Int = e.eval().asInstanceOf[Number].intValue()
 
-  /** All `graft_*` SQL function builders (shared by session-level
-    * registration and the SparkSessionExtensions install path). */
+  /** All `graft_*` SQL function builders, installed in every session
+    * by [[GraftExtensions]]. */
   lazy val sqlBuilders: Seq[(String, Seq[Expression] => Expression)] = {
     val acc = scala.collection.mutable.ArrayBuffer.empty[(String, Seq[Expression] => Expression)]
     def add(name: String)(builder: Seq[Expression] => Expression): Unit =
@@ -212,13 +219,5 @@ object GraftFunctions {
         org.apache.spark.sql.catalyst.expressions.aggregate.Complete, isDistinct = false))
     }
     acc.toSeq
-  }
-
-  /** Registers `graft_*` functions on an existing session. */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    sqlBuilders.foreach { case (name, builder) =>
-      reg.createOrReplaceTempFunction(name, builder, "built-in")
-    }
   }
 }

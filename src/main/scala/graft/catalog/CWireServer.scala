@@ -21,7 +21,6 @@ class CWireServer(val catalog: SketchCatalog) {
 
   private def yesNo(b: Boolean): String = if (b) "Yes" else "No"
   private def clientErr(msg: String): String = s"Client Error: $msg\n"
-  private def prob(p: Double): String = String.format(Locale.ROOT, "%f", Double.box(p))
 
   def interpret(lineRaw: String): String = {
     val line = lineRaw.stripSuffix("\n").stripSuffix("\r")
@@ -109,14 +108,18 @@ class CWireServer(val catalog: SketchCatalog) {
     case _ => clientErr("Unexpected arguments")
   }
 
+  /** a reply field as the daemon prints it: `%f` for the probability */
+  private def field(v: Any): String = v match {
+    case p: Double => String.format(Locale.ROOT, "%f", Double.box(p))
+    case x => x.toString
+  }
+
   private def listCmd(args: List[String]): String = args match {
     case _ :: _ :: _ => clientErr("Unexpected arguments")
     case _ =>
       val prefix = args.headOption.getOrElse("")
-      val rows = catalog.list(prefix).collect()
-      "START\n" + rows.map { r =>
-        s"${r.getString(0)} ${prob(r.getDouble(1))} ${r.getLong(2)} ${r.getLong(3)} ${r.getLong(4)}\n"
-      }.mkString + "END\n"
+      "START\n" + catalog.list(prefix).map(_.productIterator.map(field).mkString("", " ", "\n")).mkString +
+        "END\n"
   }
 
   private def infoCmd(args: List[String]): String = args match {
@@ -124,23 +127,9 @@ class CWireServer(val catalog: SketchCatalog) {
     case _ :: _ :: _ => clientErr("Unexpected arguments")
     case name :: Nil => catalog.info(name) match {
       case Left(err) => err + "\n"
-      case Right(df) =>
-        val r = df.head()
-        "START\n" +
-          s"capacity ${r.getAs[Long]("capacity")}\n" +
-          s"checks ${r.getAs[Long]("checks")}\n" +
-          s"check_hits ${r.getAs[Long]("check_hits")}\n" +
-          s"check_misses ${r.getAs[Long]("check_misses")}\n" +
-          s"in_memory ${r.getAs[Int]("in_memory")}\n" +
-          s"page_ins ${r.getAs[Long]("page_ins")}\n" +
-          s"page_outs ${r.getAs[Long]("page_outs")}\n" +
-          s"probability ${prob(r.getAs[Double]("probability"))}\n" +
-          s"sets ${r.getAs[Long]("sets")}\n" +
-          s"set_hits ${r.getAs[Long]("set_hits")}\n" +
-          s"set_misses ${r.getAs[Long]("set_misses")}\n" +
-          s"size ${r.getAs[Long]("size")}\n" +
-          s"storage ${r.getAs[Long]("storage")}\n" +
-          "END\n"
+      case Right(i) =>
+        "START\n" + i.productElementNames.zip(i.productIterator)
+          .map { case (k, v) => s"$k ${field(v)}\n" }.mkString + "END\n"
     }
   }
 }

@@ -2,8 +2,10 @@ package graft.catalog
 
 import graft.agg.GraftFunctions._
 import graft.sketch.ScalableBloom
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{BooleanType, StringType, StructField, StructType}
 import java.nio.file.{Files, Path, Paths}
 import java.nio.charset.StandardCharsets.UTF_8
 import scala.collection.mutable
@@ -83,15 +85,28 @@ class SketchCatalog(
   private def resolve(name: String): Option[Entry] =
     this.synchronized(registry.get(name))
 
-  private def withRead[A](e: Entry)(f: => A): A = {
-    val l = e.rwlock.readLock(); l.lock()
+  private def locked[A](e: Entry, write: Boolean)(f: => A): A = {
+    val l = if (write) e.rwlock.writeLock() else e.rwlock.readLock()
+    l.lock()
     try f finally l.unlock()
   }
 
-  private def withWrite[A](e: Entry)(f: => A): A = {
-    val l = e.rwlock.writeLock(); l.lock()
-    try f finally l.unlock()
-  }
+  /** The one path of every keyed verb (`filter_manager.c:335-391`):
+    * look the filter up, take its lock (write for sets, read for checks
+    * and export), fault it in, answer. */
+  private def onFilter[A](name: String, write: Boolean)(f: (Entry, ScalableBloom) => A)
+      : Either[String, A] =
+    resolve(name).toRight(NoFilter).flatMap(e => loaded(e, write)(f(e, _)))
+
+  /** Lock `e` and fault it in; a filter whose files an async drop
+    * removed meanwhile answers "Filter does not exist". */
+  private def loaded[A](e: Entry, write: Boolean)(f: ScalableBloom => A): Either[String, A] =
+    try locked(e, write)(Right(f(faultIn(e))))
+    catch { case _: FilterGone => Left(NoFilter) }
+
+  /** an on-disk filter whose sketch is loaded: the ones close, flush
+    * and the sweeps persist (in_memory filters have no disk copy) */
+  private def pagedIn(e: Entry): Boolean = !e.inMemory && e.sketch.isDefined
 
   private val registry = mutable.LinkedHashMap.empty[String, Entry]
 
@@ -147,7 +162,7 @@ class SketchCatalog(
 
   // ---- `drop <name>`: deregister now, delete files asynchronously ----
   def drop(name: String): String = this.synchronized { registry.remove(name) match {
-    case None => "Filter does not exist"
+    case None => NoFilter
     case Some(e) =>
       e.droppedFlag = true
       pendingDeletes.add(name)
@@ -160,7 +175,7 @@ class SketchCatalog(
             // finishes before the delete starts, and every persist
             // that begins after drop no-ops on the flag — so the
             // delete is the LAST write to the directory
-            withWrite(e) { deleteRecursively(filterDir(name)) }
+            locked(e, write = true) { deleteRecursively(filterDir(name)) }
           } finally pendingDeletes.remove(name)
       })
       "Done"
@@ -172,14 +187,14 @@ class SketchCatalog(
   // reference's filtmgr_unmap_filter: a long-running set on this
   // filter delays only this close, never commands on other filters ----
   def close(name: String): String = resolve(name) match {
-    case None => "Filter does not exist"
-    case Some(e) => withWrite(e) {
+    case None => NoFilter
+    case Some(e) => locked(e, write = true) {
       e.synchronized {
         // in_memory filters are never unmapped — the disk layout is
         // their ONLY backing store and they have none; the reference
         // skips them too (`filter_manager.c:516-517`) and still
         // answers Done
-        if (!e.inMemory && e.sketch.isDefined) {
+        if (pagedIn(e)) {
           persist(e)
           e.sketch = None
           e.counters.pageOuts += 1
@@ -192,7 +207,7 @@ class SketchCatalog(
   // ---- `clear <name>`: forget a PROXIED filter, keep its files ----
   def clear(name: String): String = this.synchronized {
     registry.get(name) match {
-      case None => "Filter does not exist"
+      case None => NoFilter
       case Some(e) => e.synchronized {
         if (e.sketch.isDefined) "Filter is not proxied. Close it first."
         else { registry.remove(name); "Done" }
@@ -202,18 +217,12 @@ class SketchCatalog(
 
   // ---- `flush [name]`: per-entry write lock while persisting ----
   def flush(name: String = null): String = {
-    if (name == null) {
-      val snapshot = this.synchronized(registry.values.toSeq)
-      snapshot.foreach(e => withWrite(e) {
-        e.synchronized { if (!e.inMemory && e.sketch.isDefined) persist(e) }
-      })
+    val targets =
+      if (name == null) Some(this.synchronized(registry.values.toSeq))
+      else resolve(name).map(Seq(_))
+    targets.fold(NoFilter) { es =>
+      es.foreach(e => locked(e, write = true) { e.synchronized { if (pagedIn(e)) persist(e) } })
       "Done"
-    } else resolve(name) match {
-      case None => "Filter does not exist"
-      case Some(e) => withWrite(e) {
-        e.synchronized { if (!e.inMemory && e.sketch.isDefined) persist(e) }
-        "Done"
-      }
     }
   }
 
@@ -246,15 +255,15 @@ class SketchCatalog(
     var flushed = 0
     var pagedOut = 0
     if (flush) snapshot.foreach { e =>
-      withWrite(e) { e.synchronized {
-        if (e.dirty && !e.inMemory && e.sketch.isDefined) {
+      locked(e, write = true) { e.synchronized {
+        if (e.dirty && pagedIn(e)) {
           persist(e); flushed += 1
         }
       } }
     }
     if (cold) snapshot.foreach { e =>
-      withWrite(e) { e.synchronized {
-        if (!e.hot && !e.inMemory && e.sketch.isDefined) {
+      locked(e, write = true) { e.synchronized {
+        if (!e.hot && pagedIn(e)) {
           if (e.dirty) persist(e)
           e.sketch = None
           e.counters.pageOuts += 1
@@ -298,102 +307,85 @@ class SketchCatalog(
   // (`filter_manager.c:369-391`); set_hits counts new adds, set_misses
   // the duplicates (`filter.c:299-316`).
   def setKeys(name: String, keys: DataFrame): Either[String, DataFrame] =
-    resolve(name) match {
-      case None => Left("Filter does not exist")
-      case Some(e) => try withWrite(e) {
-        val sk = faultIn(e)
-        val beforeBlob = sk.serialize()
-        val keyCol = keys.columns.head
-        val keyed = keys.select(col(keyCol).as("key")).na.drop()
-        // contains-check against the before-state, like sbf_add
-        val result = keyed.select(col("key"),
-          (!sbf_contains(snapshotRef(beforeBlob), col("key"))).as("added"))
-        // ONE distributed pass computes both the delta sketch (null
-        // keys are skipped by the aggregate) and the total key count
-        val row = result.agg(
-          sbf_agg(when(col("added"), col("key")), e.capacity, e.probability,
-            scaleSize, probReduction).as("s"),
-          count(lit(1)).as("n")).head()
-        val incoming = ScalableBloom.deserialize(row.getAs[Array[Byte]]("s"))
-        val nKeys = row.getAs[Long]("n")
-        val added = incoming.size
-        e.synchronized {
-          sk.mergeInPlace(incoming)
-          if (added > 0) e.dirty = true
-          e.counters.setHits += added
-          e.counters.setMisses += nKeys - added
-        }
-        Right(result)
-      } catch { case _: FilterGone => Left("Filter does not exist") }
+    onFilter(name, write = true) { (e, sk) =>
+      val keyCol = keys.columns.head
+      val keyed = keys.select(col(keyCol).as("key")).na.drop()
+      // contains-check against the before-state, like sbf_add: a copy
+      // taken under the lock, so the lazy result keeps answering from
+      // it whatever later sets do to the live sketch
+      val result = keyed.select(col("key"),
+        (!sbf_contains(sketch_ref(spark, sk.serialize()), col("key"))).as("added"))
+      // ONE distributed pass computes both the delta sketch (null
+      // keys are skipped by the aggregate) and the total key count
+      val row = result.agg(
+        sbf_agg(when(col("added"), col("key")), e.capacity, e.probability,
+          scaleSize, probReduction).as("s"),
+        count(lit(1)).as("n")).head()
+      val incoming = ScalableBloom.deserialize(row.getAs[Array[Byte]]("s"))
+      val nKeys = row.getAs[Long]("n")
+      val added = incoming.size
+      e.synchronized {
+        sk.mergeInPlace(incoming)
+        if (added > 0) e.dirty = true
+        e.counters.setHits += added
+        e.counters.setMisses += nKeys - added
+      }
+      result
     }
 
   // ---- driver-side single-key ops (the wire-protocol surface; the
   // distributed path is setKeys/checkKeys) ----
   def setKeyLocal(name: String, key: String): Either[String, Boolean] =
-    resolve(name) match {
-      case None => Left("Filter does not exist")
-      case Some(e) => try withWrite(e) {
-        val added = faultIn(e).add(key.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        e.synchronized {
-          if (added) { e.dirty = true; e.counters.setHits += 1 } else e.counters.setMisses += 1
-        }
-        Right(added)
-      } catch { case _: FilterGone => Left("Filter does not exist") }
+    onFilter(name, write = true) { (e, sk) =>
+      val added = sk.add(key.getBytes(UTF_8))
+      e.synchronized {
+        if (added) { e.dirty = true; e.counters.setHits += 1 } else e.counters.setMisses += 1
+      }
+      added
     }
 
   def checkKeyLocal(name: String, key: String): Either[String, Boolean] =
-    resolve(name) match {
-      case None => Left("Filter does not exist")
-      case Some(e) => try withRead(e) {
-        val present = faultIn(e).contains(key.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        e.synchronized {
-          if (present) e.counters.checkHits += 1 else e.counters.checkMisses += 1
-        }
-        Right(present)
-      } catch { case _: FilterGone => Left("Filter does not exist") }
+    onFilter(name, write = false) { (e, sk) =>
+      val present = sk.contains(key.getBytes(UTF_8))
+      e.synchronized {
+        if (present) e.counters.checkHits += 1 else e.counters.checkMisses += 1
+      }
+      present
     }
 
   // ---- `check` / `multi`: distributed membership probe (READ lock —
   // concurrent checks on one filter run in parallel, filtmgr_check_keys) ----
   def checkKeys(name: String, keys: DataFrame): Either[String, DataFrame] =
-    resolve(name) match {
-      case None => Left("Filter does not exist")
-      case Some(e) => try withRead(e) {
-        val blob = faultIn(e).serialize()
-        val keyCol = keys.columns.head
-        val res = keys.select(col(keyCol),
-          sbf_contains(snapshotRef(blob), col(keyCol)).as("present"))
-        // (hits, total) in one aggregation pass
-        val row = res.agg(
-          sum(when(col("present"), 1L).otherwise(0L)).as("hits"),
-          count(lit(1)).as("total")).head()
-        val hits = Option(row.getAs[Long]("hits")).getOrElse(0L)
-        val total = row.getAs[Long]("total")
-        e.synchronized {
-          e.counters.checkHits += hits
-          e.counters.checkMisses += total - hits
-        }
-        Right(res)
-      } catch { case _: FilterGone => Left("Filter does not exist") }
+    onFilter(name, write = false) { (e, sk) =>
+      val keyCol = keys.columns.head
+      // probes a copy taken under the lock (see setKeys)
+      val res = keys.select(col(keyCol),
+        sbf_contains(sketch_ref(spark, sk.serialize()), col(keyCol)).as("present"))
+      // (hits, total) in one aggregation pass
+      val row = res.agg(
+        sum(when(col("present"), 1L).otherwise(0L)).as("hits"),
+        count(lit(1)).as("total")).head()
+      val hits = Option(row.getAs[Long]("hits")).getOrElse(0L)
+      val total = row.getAs[Long]("total")
+      e.synchronized {
+        e.counters.checkHits += hits
+        e.counters.checkMisses += total - hits
+      }
+      res
     }
 
   // ---- batch probe across MANY filters: (name, key) pairs routed to
-  // their filters in ONE distributed job. Shape matters, and it is
-  // picked by the number of filters the probe references:
-  //   - few filters (<= multiProbeBranchBound): a UNION of per-filter
-  //     probes, each reading its own snapshot through a broadcast
-  //     handle (snapshotRef; codegen'd sbf_contains with a
-  //     per-expression memo) — joining against a sketch COLUMN would
-  //     re-copy the blob per row (UnsafeRow.getBinary) and thrash the
-  //     probe memo across interleaved filters. Each branch re-scans
-  //     the pair set, so the shape is O(branches) scans — fine while
-  //     branches are few and the scan is a cached local exchange.
-  //   - many filters: ONE scan. The blobs ship once per executor as a
-  //     broadcast Map[name -> bytes]; a mapPartitions pass routes each
-  //     row to its filter, deserializing each referenced sketch at
-  //     most once per task (per-partition cache). A 500-filter probe
-  //     is one scan of the pair set, not 500.
-  // Unknown names answer present = null either way. ----
+  // their filters in ONE scan of the pair set per chunk. The referenced
+  // sketches ship as a broadcast Map[name -> bytes], once per executor;
+  // a mapPartitions pass routes each row to its filter, deserializing
+  // each sketch at most once per task. The blobs go out in CHUNKS of
+  // at most `multiProbeByteBudget` bytes, and each chunk's result is
+  // materialized (tally) before the next chunk serializes, so the
+  // driver's serialized working set and every executor's live
+  // broadcast copy stay <= budget + one sketch. (The catalog itself
+  // keeps its sketches driver-resident by design; the bound is on the
+  // SECOND, serialized copy and on executor memory.) Unknown names fall
+  // through every chunk and answer present = null. ----
   def checkKeysMulti(pairs: DataFrame): DataFrame = {
     val nameCol = pairs.columns(0)
     val keyCol = pairs.columns(1)
@@ -410,12 +402,9 @@ class SketchCatalog(
         .collect().map(_.getString(0)).toSet
     val entries = this.synchronized(
       registry.values.filter(e => wanted.contains(e.name)).toSeq)
-    def serializeEntry(e: Entry): Option[(String, Array[Byte])] =
-      try Some(e.name -> withRead(e)(faultIn(e).serialize()))
-      catch { case _: FilterGone => None }
-    // one bounded aggregation pass per probe plan updates the
-    // referenced filters' counters — and, as a side effect,
-    // MATERIALIZES every persisted partition of `res`
+    // one bounded aggregation pass per chunk updates the referenced
+    // filters' counters — and, as a side effect, MATERIALIZES every
+    // persisted partition of `res`
     def tally(res: DataFrame): Unit =
       res.filter(col("present").isNotNull)
         .groupBy("name").agg(
@@ -429,164 +418,78 @@ class SketchCatalog(
             }
           }
         }
-    def unknownBranch(known: Set[String]): DataFrame =
-      // coalesce(..., true): a NULL probe name must land in the unknown
-      // branch (three-valued isin would silently drop the row)
+    val probedSchema = StructType(Seq(
+      StructField("name", StringType),
+      StructField("key", keyed.schema("key").dataType),
+      StructField("present", BooleanType)))
+    var maxChunkBytes = 0L
+    val chunks = mutable.ArrayBuffer.empty[DataFrame]
+    val known = mutable.ArrayBuffer.empty[String]
+    val pending = mutable.ArrayBuffer.empty[(String, Array[Byte])]
+    var pendingBytes = 0L
+    def probeChunk(): Unit = if (pending.nonEmpty) {
+      val chunkNames = pending.map(_._1).toSeq
+      val bc = spark.sparkContext.broadcast(pending.toMap)
+      val res = keyed.filter(col("name").isin(chunkNames: _*))
+        .select(col("name"), col("key"), col("key").cast("string").as("_ks"))
+        .mapPartitions(MultiProbe(bc, pendingBytes))(Encoders.row(probedSchema))
+        .persist()
+      tally(res) // materializes: the executors' copies can drop now
+      // non-blocking; a later eviction-recompute re-fetches from the
+      // driver. Without this, the persisted blocks would pin every
+      // chunk's blob map on every executor for the catalog's lifetime
+      bc.unpersist(false)
+      chunks += res
+      known ++= chunkNames
+      maxChunkBytes = math.max(maxChunkBytes, pendingBytes)
+      pending.clear(); pendingBytes = 0L
+    }
+    for (e <- entries; blob <- loaded(e, write = false)(_.serialize())) {
+      if (pendingBytes + blob.length > multiProbeByteBudget && pending.nonEmpty) probeChunk()
+      pending += (e.name -> blob); pendingBytes += blob.length
+    }
+    probeChunk()
+    lastMultiProbeStats = MultiProbeStats(chunks.size, maxChunkBytes)
+    // coalesce(..., true): a NULL probe name must land in the unknown
+    // branch (three-valued isin would silently drop the row)
+    val unknown =
       (if (known.isEmpty) keyed
        else keyed.filter(coalesce(!col("name").isin(known.toSeq: _*), lit(true))))
         .select(col("name"), col("key"), lit(null).cast("boolean").as("present"))
-    if (entries.size <= SketchCatalog.multiProbeBranchBound) {
-      val blobs = entries.flatMap(serializeEntry)
-      val branches = blobs.map { case (n, blob) =>
-        keyed.filter(col("name") === n)
-          .select(col("name"), col("key"),
-            sbf_contains(snapshotRef(blob), col("key")).as("present"))
-      }
-      // persisted: the counters pass and the caller's consumption
-      // would otherwise each re-run every probe branch;
-      // MEMORY_AND_DISK blocks are LRU-evictable, so eviction
-      // degrades to recompute
-      val res = (branches :+ unknownBranch(blobs.map(_._1).toSet))
-        .reduce(_ union _).persist()
-      tally(res)
-      lastMultiProbeStats = SketchCatalog.MultiProbeStats(
-        1, blobs.map(_._2.length.toLong).sum)
-      res
-    } else {
-      // many filters: broadcast-map probes, serialized and shipped in
-      // CHUNKS of at most `multiProbeByteBudget` blob bytes. Each
-      // chunk's result is materialized (tally) before the next chunk
-      // serializes, so the serialization working set and every
-      // executor's live broadcast copy stay <= budget + one sketch —
-      // a 500-filter probe no longer builds a 500-sketch map anywhere
-      // at once. (The catalog itself keeps its sketches driver-
-      // resident by design; the bound here is on the SECOND,
-      // serialized copy and on executor memory.) Unknown names fall
-      // through every chunk into the null branch.
-      val budget = SketchCatalog.multiProbeByteBudget
-      var maxChunkBytes = 0L
-      val chunks = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-      val knownNames = scala.collection.mutable.ArrayBuffer.empty[String]
-      val it = entries.iterator
-      val pending = scala.collection.mutable.ArrayBuffer.empty[(String, Array[Byte])]
-      var pendingBytes = 0L
-      def flush(): Unit = if (pending.nonEmpty) {
-        val chunkNames = pending.map(_._1)
-        val (probed, bc) = probeViaBroadcast(
-          keyed.filter(col("name").isin(chunkNames.toSeq: _*)), pending.toSeq)
-        val res = probed.persist()
-        tally(res) // materializes: the executors' copies can drop now
-        // non-blocking; a later eviction-recompute re-fetches from the
-        // driver. Without this, the persisted blocks would pin every
-        // chunk's blob map on every executor for the catalog's lifetime
-        bc.foreach(_.unpersist(false))
-        chunks += res
-        knownNames ++= chunkNames
-        maxChunkBytes = math.max(maxChunkBytes, pendingBytes)
-        pending.clear(); pendingBytes = 0L
-      }
-      while (it.hasNext) {
-        serializeEntry(it.next()).foreach { case (n, blob) =>
-          if (pendingBytes + blob.length > budget && pending.nonEmpty) flush()
-          pending += ((n, blob)); pendingBytes += blob.length
-        }
-      }
-      flush()
-      lastMultiProbeStats = SketchCatalog.MultiProbeStats(chunks.size, maxChunkBytes)
-      (chunks.toSeq :+ unknownBranch(knownNames.toSet)).reduce(_ union _)
-    }
+    (chunks.toSeq :+ unknown).reduce(_ union _)
   }
-
-  /** A serialized snapshot as the plan sees it: a [[graft.agg.SketchRef]]
-    * over a broadcast of `blob`, never a literal (a literal prints the
-    * blob into every plan description and copies it into every task
-    * binary). The copy is taken under the caller's entry lock, so the
-    * lazily consumed result keeps answering from the state at call time
-    * whatever later sets do to the live sketch. The broadcast is not
-    * destroyed here: the caller may consume the returned DataFrame at
-    * any later time. Spark's ContextCleaner removes it once the plans
-    * that reference it are unreachable. */
-  private def snapshotRef(blob: Array[Byte]): Column =
-    sketch_ref(spark.sparkContext.broadcast(blob), blob.length)
 
   /** Observability for the last `checkKeysMulti` plan: how many probe
     * chunks ran and the largest chunk's serialized blob bytes (the
     * spec's recorded driver-side bound). */
-  @volatile private[catalog] var lastMultiProbeStats: SketchCatalog.MultiProbeStats =
-    SketchCatalog.MultiProbeStats(0, 0L)
-
-  /** The many-filter probe shape: one scan of the pair set, blobs
-    * broadcast once per executor, each referenced sketch deserialized
-    * at most once per task. Key bytes match `sbf_contains`'s exactly
-    * (cast to string, UTF-8). */
-  private def probeViaBroadcast(keyed: DataFrame, blobs: Seq[(String, Array[Byte])])
-      : (DataFrame, Option[org.apache.spark.broadcast.Broadcast[Map[String, Array[Byte]]]]) = {
-    import org.apache.spark.sql.types._
-    val bc = spark.sparkContext.broadcast(blobs.toMap)
-    val keyType = keyed.schema("key").dataType
-    val outSchema = StructType(Seq(
-      StructField("name", StringType),
-      StructField("key", keyType),
-      StructField("present", BooleanType)))
-    val out = keyed
-      .select(col("name"), col("key"), col("key").cast("string").as("_ks"))
-      .mapPartitions { rows =>
-        val cache = mutable.HashMap.empty[String, ScalableBloom]
-        rows.map { r =>
-          val n = if (r.isNullAt(0)) null else r.getString(0)
-          val ks = if (r.isNullAt(2)) null else r.getString(2)
-          val present: java.lang.Boolean =
-            if (n == null || ks == null) null
-            else bc.value.get(n) match {
-              case Some(blob) =>
-                val s = cache.getOrElseUpdate(n, ScalableBloom.deserialize(blob))
-                val kb = ks.getBytes(UTF_8)
-                java.lang.Boolean.valueOf(s.contains(kb, 0, kb.length))
-              case None => null // unregistered name
-            }
-          org.apache.spark.sql.Row(n, r.get(1), present)
-        }
-      }(org.apache.spark.sql.Encoders.row(outSchema))
-    (out, Some(bc))
-  }
+  @volatile private[catalog] var lastMultiProbeStats: MultiProbeStats = MultiProbeStats(0, 0L)
 
   // ---- `list [prefix]`: lexicographic (ART order). Registry snapshot
   // under the monitor; per-entry reads under the entry READ lock
   // OUTSIDE it (size/byte reads iterate the sketch's layer buffer,
   // which a concurrent write-locked `set` may be growing — and a busy
   // filter must not block unrelated commands on the monitor) ----
-  def list(prefix: String = ""): DataFrame = {
-    import spark.implicits._
+  def list(prefix: String = ""): Seq[Listed] = {
     val snapshot = this.synchronized {
       registry.values.toSeq.filter(_.name.startsWith(prefix)).sortBy(_.name)
     }
-    snapshot
-      .map { e => withRead(e) { e.synchronized {
-        // do NOT fault in for list (reference lists proxied too)
-        val (bytes, size) = storageAndSize(e)
-        (e.name, e.probability, bytes, e.capacity, size)
-      } } }
-      .toDF("name", "probability", "bytes", "capacity", "size")
+    snapshot.map { e => locked(e, write = false) { e.synchronized {
+      // do NOT fault in for list (reference lists proxied too)
+      val (bytes, size) = storageAndSize(e)
+      Listed(e.name, e.probability, bytes, e.capacity, size)
+    } } }
   }
 
-  // ---- `info <name>`: 13 fields (`conn_handler.c:447-476`) ----
-  def info(name: String): Either[String, DataFrame] = resolve(name) match {
-    case None => Left("Filter does not exist")
-    case Some(e) =>
-      import spark.implicits._
-      // entry READ lock for the same reason as `list` above
-      val (c, proxied, storage, size) = withRead(e) { e.synchronized {
-        val (storage, size) = storageAndSize(e)
-        (e.counters.copy(), e.sketch.isEmpty, storage, size)
-      } }
-      Right(Seq((
-        e.capacity, c.checkHits + c.checkMisses, c.checkHits, c.checkMisses,
-        if (proxied) 0 else 1, c.pageIns, c.pageOuts, e.probability,
-        c.setHits + c.setMisses, c.setHits, c.setMisses, size, storage))
-        .toDF("capacity", "checks", "check_hits", "check_misses", "in_memory",
-          "page_ins", "page_outs", "probability", "sets", "set_hits",
-          "set_misses", "size", "storage"))
-  }
+  // ---- `info <name>`: 13 fields (`conn_handler.c:447-476`); entry
+  // READ lock for the same reason as `list` above ----
+  def info(name: String): Either[String, Info] =
+    resolve(name).toRight(NoFilter).map { e => locked(e, write = false) { e.synchronized {
+      val (storage, size) = storageAndSize(e)
+      val c = e.counters
+      Info(e.capacity, c.checkHits + c.checkMisses, c.checkHits, c.checkMisses,
+        if (e.sketch.isEmpty) 0 else 1, c.pageIns, c.pageOuts, e.probability,
+        c.setHits + c.setMisses, c.setHits, c.setMisses, size, storage)
+    } } }
 
   def exists(name: String): Boolean = this.synchronized { registry.contains(name) }
   def names: Seq[String] = this.synchronized { registry.keys.toSeq.sorted }
@@ -615,28 +518,24 @@ class SketchCatalog(
     * (512-byte header carries m/k/count), which is also what the
     * daemon's own discover reads back. */
   def exportBloomd(name: String, destRoot: Path): Either[String, Path] =
-    resolve(name) match {
-      case None => Left("Filter does not exist")
-      case Some(e) => try withRead(e) {
-        val sk = faultIn(e)
-        val dir = destRoot.resolve(s"bloomd.$name")
-        Files.createDirectories(dir)
-        e.synchronized {
-          sk.layers.zipWithIndex.foreach { case ((_, f), i) =>
-            Files.write(dir.resolve(f"data.$i%03d.mmap"), f.serialize())
-          }
-          val ini = String.format(java.util.Locale.ROOT,
-            "[bloomd]\ninitial_capacity = %d\ndefault_probability = %f\n" +
-              "scale_size = %d\nprobability_reduction = %f\nin_memory = %d\n" +
-              "size = %d\ncapacity = %d\nbytes = %d\n",
-            Long.box(sk.initialCapacity), Double.box(sk.fpProbability),
-            Int.box(sk.scaleSize), Double.box(sk.probReduction),
-            Int.box(if (e.inMemory) 1 else 0),
-            Long.box(sk.size), Long.box(sk.totalCapacity), Long.box(sk.totalByteSize))
-          Files.write(dir.resolve("config.ini"), ini.getBytes(UTF_8))
+    onFilter(name, write = false) { (e, sk) =>
+      val dir = destRoot.resolve(s"bloomd.$name")
+      Files.createDirectories(dir)
+      e.synchronized {
+        sk.layers.zipWithIndex.foreach { case ((_, f), i) =>
+          Files.write(dir.resolve(f"data.$i%03d.mmap"), f.serialize())
         }
-        Right(dir)
-      } catch { case _: FilterGone => Left("Filter does not exist") }
+        val ini = String.format(java.util.Locale.ROOT,
+          "[bloomd]\ninitial_capacity = %d\ndefault_probability = %f\n" +
+            "scale_size = %d\nprobability_reduction = %f\nin_memory = %d\n" +
+            "size = %d\ncapacity = %d\nbytes = %d\n",
+          Long.box(sk.initialCapacity), Double.box(sk.fpProbability),
+          Int.box(sk.scaleSize), Double.box(sk.probReduction),
+          Int.box(if (e.inMemory) 1 else 0),
+          Long.box(sk.size), Long.box(sk.totalCapacity), Long.box(sk.totalByteSize))
+        Files.write(dir.resolve("config.ini"), ini.getBytes(UTF_8))
+      }
+      dir
     }
 
   /** Register a filter restored from a reference-daemon directory
@@ -713,12 +612,7 @@ class SketchCatalog(
 
 object SketchCatalog {
 
-  /** Above this many referenced filters, `checkKeysMulti` switches
-    * from the union of per-filter probes (O(branches) re-scans of
-    * the pair set) to the single-scan broadcast-map shape. 16 keeps
-    * small probes on the codegen'd expression path while bounding the
-    * worst case at catalog scale. */
-  final val multiProbeBranchBound = 16
+  private final val NoFilter = "Filter does not exist"
 
   /** Byte budget for ONE broadcast-map probe chunk: `checkKeysMulti`
     * serializes and ships at most this many blob bytes at a time (a
@@ -730,6 +624,43 @@ object SketchCatalog {
   @volatile var multiProbeByteBudget: Long = 64L << 20
 
   final case class MultiProbeStats(chunks: Int, maxChunkBytes: Long)
+
+  /** The `checkKeysMulti` partition function: (name, key, key as
+    * string) rows in, (name, key, present) out. Key bytes match
+    * `sbf_contains`'s exactly (cast to string, UTF-8). A named value,
+    * not a closure, so the plan prints the broadcast it reads as
+    * `sketch#<id>(<n> bytes)`, as [[graft.agg.SketchRef]] does. */
+  private final case class MultiProbe(bc: Broadcast[Map[String, Array[Byte]]], bytes: Long)
+      extends (Iterator[Row] => Iterator[Row]) {
+    def apply(rows: Iterator[Row]): Iterator[Row] = {
+      val cache = mutable.HashMap.empty[String, ScalableBloom]
+      rows.map { r =>
+        val n = if (r.isNullAt(0)) null else r.getString(0)
+        val ks = if (r.isNullAt(2)) null else r.getString(2)
+        val present: java.lang.Boolean =
+          if (n == null || ks == null) null
+          else bc.value.get(n) match {
+            case Some(blob) =>
+              val s = cache.getOrElseUpdate(n, ScalableBloom.deserialize(blob))
+              val kb = ks.getBytes(UTF_8)
+              java.lang.Boolean.valueOf(s.contains(kb, 0, kb.length))
+            case None => null // unregistered name
+          }
+        Row(n, r.get(1), present)
+      }
+    }
+    override def toString: String = s"sketch#${bc.id}($bytes bytes)"
+  }
+
+  /** One `info` reply: the fields of `conn_handler.c:447-476`, named
+    * and ordered as the wire prints them. */
+  final case class Info(
+      capacity: Long, checks: Long, check_hits: Long, check_misses: Long,
+      in_memory: Int, page_ins: Long, page_outs: Long, probability: Double,
+      sets: Long, set_hits: Long, set_misses: Long, size: Long, storage: Long)
+
+  /** One `list` line, fields in wire order. */
+  final case class Listed(name: String, probability: Double, bytes: Long, capacity: Long, size: Long)
 
   final case class Counters(
       var checkHits: Long = 0, var checkMisses: Long = 0,

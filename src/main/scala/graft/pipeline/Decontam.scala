@@ -2,7 +2,7 @@ package graft.pipeline
 
 import graft.agg.GraftFunctions._
 import graft.pipeline.TextFunctions._
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /**
@@ -18,10 +18,10 @@ import org.apache.spark.sql.functions._
  *   1. the PROTECTED set is summarized once: distinct eval n-grams →
  *      one scalable-bloom sketch (`sbf_agg`, so the summary sizes
  *      itself to the eval corpus — no capacity guess);
- *   2. the training side explodes to n-grams and probes the sketch as
- *      a plan LITERAL (`sbf_contains`, codegen'd, row-local — ships
- *      once per executor, NO join against the full eval inventory and
- *      no shuffle of the clean majority);
+ *   2. the training side explodes to n-grams and probes the sketch
+ *      through a broadcast handle (`sbf_contains` over `sketch_ref`,
+ *      codegen'd, row-local — ships once per executor, NO join against
+ *      the full eval inventory and no shuffle of the clean majority);
  *   3. only the surviving candidates (true overlaps + the sketch's
  *      ~p false positives) reach the exact semi-join verify, which
  *      kills the false positives.
@@ -60,23 +60,23 @@ object Decontam {
 
   /** The eval summary: one scalable-bloom over the distinct eval
     * n-grams. One small driver round-trip for the sketch BYTES (not
-    * row data) — the summary then rides probe plans as a literal,
-    * like q_bloom_prejoin. */
+    * row data), broadcast once; probe plans read it through the
+    * returned handle ([[graft.agg.SketchRef]]), like q_bloom_prejoin. */
   def evalSketch(evalGramsDf: DataFrame, initialCapacity: Long = 100000L,
-                 p: Double = 1e-4): Array[Byte] =
-    evalGramsDf
+                 p: Double = 1e-4): Column =
+    sketch_ref(evalGramsDf.sparkSession, evalGramsDf
       .agg(sbf_agg(col("g"), initialCapacity, p, 4, 0.9).as("s"))
-      .head().getAs[Array[Byte]]("s")
+      .head().getAs[Array[Byte]]("s"))
 
   /** The scrub core SHARED by the batch and streaming operators (the
     * keep rule must stay answer-identical between them): shingled
-    * docs (doc_id, sh) -> (doc_id, n_overlap, keep) via literal-sketch
+    * docs (doc_id, sh) -> (doc_id, n_overlap, keep) via sketch
     * prefilter, exact semi-join verify, per-doc distinct counts. */
-  private[graft] def scrubShingled(docsSh: DataFrame, sketch: Array[Byte],
+  private[graft] def scrubShingled(docsSh: DataFrame, sketch: Column,
                                    evalGramsDf: DataFrame, maxOverlap: Long): DataFrame = {
     val counts = docsSh
       .select(col("doc_id"), explode(col("sh")).as("g"))
-      .filter(sbf_contains(lit(sketch), col("g")))
+      .filter(sbf_contains(sketch, col("g")))
       .join(evalGramsDf, Seq("g"), "left_semi") // exact verify: FPs die here
       .groupBy("doc_id")
       .agg(countDistinct(col("g")).as("n_overlap"))

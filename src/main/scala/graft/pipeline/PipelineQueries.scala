@@ -2021,12 +2021,12 @@ object PipelineQueries {
       val cust = s.read.parquet(s"$dir/customer.parquet")
         .filter(col("c_mktsegment") === "BUILDING")
         .select(col("c_custkey"))
-      val sketch = cust
+      val sketch = sketch_ref(s, cust
         .agg(bloom_agg(col("c_custkey").cast("string"), 100000L, 1e-4).as("sk"))
-        .head().getAs[Array[Byte]]("sk")
+        .head().getAs[Array[Byte]]("sk"))
       val orders = s.read.parquet(s"$dir/orders.parquet")
       val pruned = orders.filter(
-        bloom_contains(lit(sketch), col("o_custkey").cast("string")))
+        bloom_contains(sketch, col("o_custkey").cast("string")))
       pruned.join(broadcast(cust), pruned("o_custkey") === cust("c_custkey"), "left_semi")
         .groupBy(col("o_orderpriority"))
         .agg(count(lit(1)).as("n_orders"),

@@ -13,9 +13,9 @@ import org.apache.spark.sql.streaming.Trigger
  * mid-run), and each micro-batch is scrubbed in place:
  *
  *   1. the eval summary (one scalable-bloom over distinct eval
- *      n-grams) is computed once and probed row-local inside the
- *      stream plan as a literal — the clean majority of every batch
- *      is dropped without any join;
+ *      n-grams) is computed and broadcast once, and probed row-local
+ *      inside every batch's plan through that one handle — the clean
+ *      majority of every batch is dropped without any join;
  *   2. the surviving candidate n-grams semi-join the exact eval
  *      n-gram set (materialized ONCE as parquet, cached — the static
  *      side of every batch's scrub; no driver collect of row data),
@@ -53,7 +53,8 @@ object StreamDecontam {
                     awaitInput: () => Unit = () => ()): DataFrame = {
     val ss = StreamSinks.sessionForState(spark, statePartitions)
     val testG = graft.pipeline.Decontam.evalGrams(test, n)
-    // static side computed once; sketch bytes ride every batch's plan
+    // static side computed and broadcast once; every batch's plan
+    // probes the same handle
     val sketch = graft.pipeline.Decontam.evalSketch(testG)
     // materialize the exact eval set once (executor-side write) and
     // re-read it in the stream's session: the static verify side,

@@ -1,8 +1,7 @@
 package graft
 
+import graft.SourceScan.offenders
 import org.scalatest.funsuite.AnyFunSuite
-import java.nio.file.{Files, Path, Paths}
-import scala.jdk.CollectionConverters._
 
 /**
  * Keeps one session factory: every session outside the driver contract
@@ -11,19 +10,6 @@ import scala.jdk.CollectionConverters._
  * after it in the shared test JVM.
  */
 class OneSessionFactorySpec extends AnyFunSuite {
-
-  private def sources(root: String): Seq[Path] = {
-    val walk = Files.walk(Paths.get(root))
-    try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq.sorted
-    finally walk.close()
-  }
-
-  private def offenders(root: String, pattern: String, allowed: Set[String]): Seq[String] =
-    sources(root).filterNot(p => allowed(p.getFileName.toString)).flatMap { p =>
-      Files.readAllLines(p).asScala.zipWithIndex.collect {
-        case (line, i) if pattern.r.findFirstIn(line).isDefined => s"$p:${i + 1}: ${line.trim}"
-      }
-    }
 
   test("only LocalSpark, Bench and Verify build a SparkSession") {
     val found = offenders("src", """SparkSession\s*\.\s*builder""",

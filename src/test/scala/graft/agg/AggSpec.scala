@@ -53,7 +53,6 @@ class AggSpec extends AnyFunSuite with SharedSpark {
   }
 
   test("bloom_contains probe: zero false negatives, fp within bound via SQL surface") {
-    GraftFunctions.register(spark)
     import spark.implicits._
     (0 until 5000).map(i => s"in$i").toDF("k").createOrReplaceTempView("ins")
     val fp = spark.sql(

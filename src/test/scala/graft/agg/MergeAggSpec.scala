@@ -93,7 +93,6 @@ class MergeAggSpec extends AnyFunSuite with SharedSpark {
   families.foreach { f =>
     test(s"${f.name}_merge_agg: Column and SQL rollups agree and match a single-pass build") {
       import spark.implicits._
-      GraftFunctions.register(spark)
       // partials in group order on one partition, so order-sensitive
       // merges see the same sequence through both surfaces
       val parts = rows.groupBy("g").agg(f.build.as("s")).orderBy("g").collect()

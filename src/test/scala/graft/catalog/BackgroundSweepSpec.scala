@@ -42,12 +42,12 @@ class BackgroundSweepSpec extends AnyFunSuite with SharedSpark {
     // sweep 2: `idle` was untouched since sweep 1 -> paged out
     val (_, out2) = cat.backgroundSweep(flush = false, cold = true)
     assert(out2 == 1)
-    assert(cat.info("warm").toOption.get.head().getAs[Int]("in_memory") == 1)
-    assert(cat.info("idle").toOption.get.head().getAs[Int]("in_memory") == 0)
+    assert(cat.info("warm").toOption.get.in_memory == 1)
+    assert(cat.info("idle").toOption.get.in_memory == 0)
     // paged-out data survives: faults back in on use
     assert(cat.setKeyLocal("idle", "y").toOption.get)
     assert(cat.checkKeyLocal("idle", "y").toOption.get)
-    assert(cat.info("idle").toOption.get.head().getAs[Long]("page_ins") >= 1)
+    assert(cat.info("idle").toOption.get.page_ins >= 1)
   }
 
   test("interval threads run the sweeps") {
@@ -60,7 +60,7 @@ class BackgroundSweepSpec extends AnyFunSuite with SharedSpark {
       var proxied = false
       while (!proxied && System.nanoTime() < deadline) {
         Thread.sleep(50)
-        proxied = cat.info("t").toOption.get.head().getAs[Int]("in_memory") == 0
+        proxied = cat.info("t").toOption.get.in_memory == 0
       }
       assert(proxied, "cold thread should eventually page out an untouched filter")
     } finally cat.stopBackground()

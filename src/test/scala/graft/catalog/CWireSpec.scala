@@ -76,6 +76,38 @@ class CWireSpec extends AnyFunSuite with SharedSpark {
     assert(info.startsWith("START\ncapacity 100000\n") && info.endsWith("END\n"), info)
   }
 
+  test("C wire info block and list line, byte for byte, across a close and a fault-in") {
+    val dir = java.nio.file.Files.createTempDirectory("cwirepin").toString
+    val srv = new CWireServer(new SketchCatalog(spark, dir))
+    def expect(cmd: String, want: String): Unit =
+      assert(srv.interpret(cmd) == want, s"command: $cmd")
+    expect("create pin capacity=20000 prob=0.001", "Done\n")
+    expect("create pinmem capacity=30000 in_memory=1", "Done\n")
+    expect("set pin a", "Yes\n")
+    expect("bulk pin a b c", "No Yes Yes\n")
+    expect("multi pin a z", "Yes No\n")
+    expect("close pin", "Done\n")
+    // proxied: size and bytes come from the persisted sketch
+    expect("list pin", "START\npin 0.001000 48438 20000 3\npinmem 0.000100 90372 30000 0\nEND\n")
+    expect("check pin b", "Yes\n")
+    expect("info pin",
+      "START\n" +
+        "capacity 20000\n" +
+        "checks 3\n" +
+        "check_hits 2\n" +
+        "check_misses 1\n" +
+        "in_memory 1\n" +
+        "page_ins 1\n" +
+        "page_outs 1\n" +
+        "probability 0.001000\n" +
+        "sets 4\n" +
+        "set_hits 3\n" +
+        "set_misses 1\n" +
+        "size 3\n" +
+        "storage 48438\n" +
+        "END\n")
+  }
+
   test("multi and bulk answer the filter's error when it is dropped mid-command") {
     val dir = java.nio.file.Files.createTempDirectory("cwiredrop").toString
     // every key op drops its filter once it has answered, so the first

@@ -34,20 +34,20 @@ class CatalogSpec extends AnyFunSuite with SharedSpark {
     val keys = Seq("a", "b", "c", "a").toDF("k").coalesce(1)
     val res = c.setKeys("f1", keys).toOption.get.collect().map(r => (r.getString(0), r.getBoolean(1))).toMap
     assert(res("a") && res("b") && res("c")) // all new vs initial state
-    val info1 = c.info("f1").toOption.get.head()
-    assert(info1.getAs[Long]("sets") == 4)
-    assert(info1.getAs[Long]("set_hits") == 3)
-    assert(info1.getAs[Long]("set_misses") == 1)
-    assert(info1.getAs[Long]("size") == 3)
+    val info1 = c.info("f1").toOption.get
+    assert(info1.sets == 4)
+    assert(info1.set_hits == 3)
+    assert(info1.set_misses == 1)
+    assert(info1.size == 3)
 
     val checks = c.checkKeys("f1", Seq("a", "zz").toDF("k")).toOption.get
       .collect().map(r => (r.getString(0), r.getBoolean(1))).toMap
     assert(checks("a") && !checks("zz"))
-    val info2 = c.info("f1").toOption.get.head()
-    assert(info2.getAs[Long]("checks") == 2)
-    assert(info2.getAs[Long]("check_hits") == 1)
-    assert(info2.getAs[Long]("check_misses") == 1)
-    assert(info2.getAs[Int]("in_memory") == 1)
+    val info2 = c.info("f1").toOption.get
+    assert(info2.checks == 2)
+    assert(info2.check_hits == 1)
+    assert(info2.check_misses == 1)
+    assert(info2.in_memory == 1)
   }
 
   test("close -> proxied -> fault-in on check; clear only when proxied") {
@@ -57,13 +57,13 @@ class CatalogSpec extends AnyFunSuite with SharedSpark {
     c.setKeys("lc", Seq("k1", "k2").toDF("k"))
     assert(c.clear("lc") == "Filter is not proxied. Close it first.")
     assert(c.close("lc") == "Done")
-    val info = c.info("lc").toOption.get.head()
-    assert(info.getAs[Int]("in_memory") == 0) // proxied
-    assert(info.getAs[Long]("size") == 2) // read from disk
+    val info = c.info("lc").toOption.get
+    assert(info.in_memory == 0) // proxied
+    assert(info.size == 2) // read from disk
     // fault-in on use
     val chk = c.checkKeys("lc", Seq("k1").toDF("k")).toOption.get.head()
     assert(chk.getBoolean(1))
-    assert(c.info("lc").toOption.get.head().getAs[Long]("page_ins") == 1)
+    assert(c.info("lc").toOption.get.page_ins == 1)
     // now loaded again -> clear refused, close again then clear works
     assert(c.clear("lc") == "Filter is not proxied. Close it first.")
     assert(c.close("lc") == "Done")
@@ -77,16 +77,16 @@ class CatalogSpec extends AnyFunSuite with SharedSpark {
     c.create("ci", capacity = 20000)
     // past capacity, so the ladder has grown and storage spans two layers
     c.setKeys("ci", (0 until 30000).map(i => s"ck$i").toDF("k")).toOption.get.count()
-    val before = c.info("ci").toOption.get.head()
+    val before = c.info("ci").toOption.get
     assert(c.close("ci") == "Done")
-    val after = c.info("ci").toOption.get.head()
-    assert(after.getAs[Int]("in_memory") == 0)
-    assert(after.getAs[Long]("size") == before.getAs[Long]("size"))
-    assert(after.getAs[Long]("storage") == before.getAs[Long]("storage"))
-    assert(after.getAs[Long]("page_ins") == before.getAs[Long]("page_ins"))
-    val listed = c.list("ci").head()
-    assert(listed.getAs[Long]("size") == before.getAs[Long]("size"))
-    assert(listed.getAs[Long]("bytes") == before.getAs[Long]("storage"))
+    val after = c.info("ci").toOption.get
+    assert(after.in_memory == 0)
+    assert(after.size == before.size)
+    assert(after.storage == before.storage)
+    assert(after.page_ins == before.page_ins)
+    val listed = c.list("ci").head
+    assert(listed.size == before.size)
+    assert(listed.bytes == before.storage)
   }
 
   test("restore across catalog restart keeps membership and size") {
@@ -102,8 +102,8 @@ class CatalogSpec extends AnyFunSuite with SharedSpark {
     val r = c2.checkKeys("persist1", Seq("pk0", "pk999", "nope").toDF("k"))
       .toOption.get.collect().map(x => (x.getString(0), x.getBoolean(1))).toMap
     assert(r("pk0") && r("pk999") && !r("nope"))
-    val info = c2.info("persist1").toOption.get.head()
-    assert(info.getAs[Long]("size") == 1000)
+    val info = c2.info("persist1").toOption.get
+    assert(info.size == 1000)
   }
 
   test("test_mgr_grow (test_filtmgr.c:693): inserts past capacity grow the ladder, zero false negatives") {
@@ -125,8 +125,8 @@ class CatalogSpec extends AnyFunSuite with SharedSpark {
     // the hard invariant: no false negatives after growth
     val present = cat.checkKeys("scale1", keys).toOption.get
     assert(present.filter(!org.apache.spark.sql.functions.col("present")).count() == 0)
-    val info = cat.info("scale1").toOption.get.head()
-    assert(info.getAs[Long]("size") == n)
+    val info = cat.info("scale1").toOption.get
+    assert(info.size == n)
     assert(cat.drop("scale1") == "Done")
   }
 
@@ -136,8 +136,8 @@ class CatalogSpec extends AnyFunSuite with SharedSpark {
     Seq("hey", "there", "person").foreach(k => assert(cat.setKeyLocal("mem1", k) == Right(true)))
     assert(cat.close("mem1") == "Done") // reference: unmap skips in_memory, still returns 0
     Seq("hey", "there", "person").foreach(k => assert(cat.checkKeyLocal("mem1", k) == Right(true)))
-    val info = cat.info("mem1").toOption.get.head()
-    assert(info.getAs[Int]("in_memory") == 1 && info.getAs[Long]("page_outs") == 0)
+    val info = cat.info("mem1").toOption.get
+    assert(info.in_memory == 1 && info.page_outs == 0)
     assert(cat.drop("mem1") == "Done")
   }
 
@@ -194,13 +194,13 @@ class CatalogSpec extends AnyFunSuite with SharedSpark {
     val c = freshCatalog()
     c.create("pfx_b"); c.create("pfx_a"); c.create("other")
     c.setKeys("pfx_a", Seq("x").toDF("k"))
-    val all = c.list().collect().map(_.getString(0))
+    val all = c.list().map(_.name)
     assert(all.sameElements(Array("other", "pfx_a", "pfx_b")))
-    val pfx = c.list("pfx_").collect().map(_.getString(0))
+    val pfx = c.list("pfx_").map(_.name)
     assert(pfx.sameElements(Array("pfx_a", "pfx_b")))
     assert(c.drop("pfx_a") == "Done")
     assert(c.drop("pfx_a") == "Filter does not exist")
-    assert(c.list("pfx_").collect().map(_.getString(0)).sameElements(Array("pfx_b")))
+    assert(c.list("pfx_").map(_.name).sameElements(Array("pfx_b")))
     assert(c.info("nonexistent").isLeft)
   }
 }

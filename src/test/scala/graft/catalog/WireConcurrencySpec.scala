@@ -1,6 +1,8 @@
 package graft.catalog
 
 import graft.SharedSpark
+import org.apache.spark.sql.execution.{SparkPlan, UnionExec}
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -104,9 +106,9 @@ class WireConcurrencySpec extends AnyFunSuite with SharedSpark {
         assert(cat.checkKeyLocal("hammer", s"key-$t-$i") == Right(true))
       }
     }
-    val info = cat.info("hammer").toOption.get.head()
-    assert(info.getAs[Long]("set_hits") == nThreads.toLong * perThread)
-    assert(info.getAs[Long]("size") == nThreads.toLong * perThread)
+    val info = cat.info("hammer").toOption.get
+    assert(info.set_hits == nThreads.toLong * perThread)
+    assert(info.size == nThreads.toLong * perThread)
   }
 
   test("checkKeysMulti faults in ONLY referenced filters (cold-sweep protocol preserved)") {
@@ -122,50 +124,57 @@ class WireConcurrencySpec extends AnyFunSuite with SharedSpark {
       .collect().map(r => (r.getString(1), r.get(2))).toMap
     assert(res("t1") == true && res("nope") == false)
     // the un-referenced proxied filter stayed unloaded and un-hot
-    val info = cat.info("untouched").toOption.get.head()
-    assert(info.getAs[Int]("in_memory") == 0, "probe must not fault in unreferenced filters")
+    val info = cat.info("untouched").toOption.get
+    assert(info.in_memory == 0, "probe must not fault in unreferenced filters")
     assert(cat.listCold() == Seq("untouched"), "only the probed filter was marked hot")
   }
 
-  test("checkKeysMulti over 64 filters: one bounded scan (broadcast shape), answers + counters exact") {
-    import spark.implicits._
-    val cat = newCatalog()
-    val nFilters = 64
-    (0 until nFilters).foreach { f =>
-      assert(cat.create(s"mf$f") == "Done")
-      assert(cat.setKeys(s"mf$f", Seq(s"own-$f", "shared").toDF("k")).isRight)
-    }
-    // every filter probed for: its own key (Yes), another filter's own
-    // key (No), the shared key (Yes) — plus unknown-name and null rows
-    val pairs = (0 until nFilters).flatMap { f =>
-      Seq((s"mf$f", s"own-$f"), (s"mf$f", s"own-${(f + 1) % nFilters}"), (s"mf$f", "shared"))
-    } ++ Seq(("ghost", "x"), (null, "y"))
-    val res = cat.checkKeysMulti(pairs.toDF("name", "key"))
-    val rows = res.collect().map(r =>
-      (Option(r.getString(0)).orNull, r.getString(1)) -> Option(r.get(2)).orNull).toMap
-    assert(rows.size == pairs.size)
-    (0 until nFilters).foreach { f =>
-      assert(rows((s"mf$f", s"own-$f")) == true)
-      assert(rows((s"mf$f", s"own-${(f + 1) % nFilters}")) == false)
-      assert(rows((s"mf$f", "shared")) == true)
-    }
-    assert(rows(("ghost", "x")) == null)
-    assert(rows((null, "y")) == null)
-    // plan evidence: the 64-filter probe is NOT 64 re-scans of the
-    // pair set — no union anywhere near branch width, and at most a
-    // couple of leaf scans in the whole physical plan
-    val plan = res.queryExecution.executedPlan
-    val unionWidths = plan.collect {
-      case u: org.apache.spark.sql.execution.UnionExec => u.children.length }
-    assert(unionWidths.forall(_ <= 2), s"union widths $unionWidths")
-    val leafScans = plan.collectLeaves().length
-    assert(leafScans <= 3, s"expected a bounded number of scans, got $leafScans leaves:\n$plan")
-    // the one aggregation pass updated every filter's counters
-    (0 until nFilters).foreach { f =>
-      val info = cat.info(s"mf$f").toOption.get.head()
-      assert(info.getAs[Long]("checks") == 3, s"mf$f checks")
-      assert(info.getAs[Long]("check_hits") == 2, s"mf$f hits")
-      assert(info.getAs[Long]("check_misses") == 1, s"mf$f misses")
+  // 2 filters is the op_multi_filter_check shape; 64 the catalog scale
+  Seq(2, 64).foreach { nFilters =>
+    test(s"checkKeysMulti over $nFilters filters: one bounded scan (broadcast shape), answers + counters exact") {
+      import spark.implicits._
+      val cat = newCatalog()
+      (0 until nFilters).foreach { f =>
+        assert(cat.create(s"mf$f") == "Done")
+        assert(cat.setKeys(s"mf$f", Seq(s"own-$f", "shared").toDF("k")).isRight)
+      }
+      // every filter probed for: its own key (Yes), another filter's own
+      // key (No), the shared key (Yes) — plus unknown-name and null rows
+      val pairs = (0 until nFilters).flatMap { f =>
+        Seq((s"mf$f", s"own-$f"), (s"mf$f", s"own-${(f + 1) % nFilters}"), (s"mf$f", "shared"))
+      } ++ Seq(("ghost", "x"), (null, "y"))
+      val res = cat.checkKeysMulti(pairs.toDF("name", "key"))
+      val rows = res.collect().map(r =>
+        (Option(r.getString(0)).orNull, r.getString(1)) -> Option(r.get(2)).orNull).toMap
+      assert(rows.size == pairs.size)
+      (0 until nFilters).foreach { f =>
+        assert(rows((s"mf$f", s"own-$f")) == true)
+        assert(rows((s"mf$f", s"own-${(f + 1) % nFilters}")) == false)
+        assert(rows((s"mf$f", "shared")) == true)
+      }
+      assert(rows(("ghost", "x")) == null)
+      assert(rows((null, "y")) == null)
+      // plan evidence: the probe is NOT one re-scan of the pair set per
+      // filter — no union anywhere near branch width, and at most a
+      // couple of leaf scans in the whole physical plan
+      // (read through the cached relations a probe result scans: a
+      // persisted union is one InMemoryTableScan leaf from outside)
+      val plan = res.queryExecution.executedPlan
+      def operators(p: SparkPlan): Seq[SparkPlan] = p match {
+        case m: InMemoryTableScanExec => operators(m.relation.cachedPlan)
+        case _ => p +: p.children.flatMap(operators)
+      }
+      val unionWidths = operators(plan).collect { case u: UnionExec => u.children.length }
+      assert(unionWidths.forall(_ <= 2), s"union widths $unionWidths")
+      val leafScans = operators(plan).count(_.children.isEmpty)
+      assert(leafScans <= 3, s"expected a bounded number of scans, got $leafScans leaves:\n$plan")
+      // the one aggregation pass updated every filter's counters
+      (0 until nFilters).foreach { f =>
+        val info = cat.info(s"mf$f").toOption.get
+        assert(info.checks == 3, s"mf$f checks")
+        assert(info.check_hits == 2, s"mf$f hits")
+        assert(info.check_misses == 1, s"mf$f misses")
+      }
     }
   }
 
@@ -202,10 +211,10 @@ class WireConcurrencySpec extends AnyFunSuite with SharedSpark {
         s"recorded chunk bytes ${st.maxChunkBytes} exceed the 1 MiB budget")
       // counters survive chunking: every filter tallied exactly once
       (0 until nFilters).foreach { f =>
-        val info = cat.info(s"cf$f").toOption.get.head()
-        assert(info.getAs[Long]("checks") == 2, s"cf$f checks")
-        assert(info.getAs[Long]("check_hits") == 1, s"cf$f hits")
-        assert(info.getAs[Long]("check_misses") == 1, s"cf$f misses")
+        val info = cat.info(s"cf$f").toOption.get
+        assert(info.checks == 2, s"cf$f checks")
+        assert(info.check_hits == 1, s"cf$f hits")
+        assert(info.check_misses == 1, s"cf$f misses")
       }
     } finally SketchCatalog.multiProbeByteBudget = oldBudget
   }

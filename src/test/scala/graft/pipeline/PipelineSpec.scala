@@ -52,7 +52,6 @@ class PipelineSpec extends AnyFunSuite with SharedSpark {
       .select(TextFunctions.stripAccents(col("t")).as("s")).collect()(0).getString(0)
     assert(sup == new String(Character.toChars(0x10A00)))
     // registry surface agrees with the typed API
-    graft.agg.GraftFunctions.register(spark)
     val viaSql = spark.sql(
       "SELECT graft_nfc('Cafe\u0301'), graft_strip_accents('Caf\u00E9')").collect()(0)
     assert(viaSql.getString(0) == "Caf\u00E9" && viaSql.getString(1) == "Cafe")
