@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * ~6 replicas, and the original `range(0, reps, 1, 128)` driver
   * collapsed to `reps` non-empty partitions: 6 ~370 MB files whose
   * ~18 row groups starved the 8-core scaling leg (recorded eff 0.748
-  * in BENCH_sf10_r05_local.json vs 0.87 with a chunky layout). The
+  * in artifacts/r05/BENCH_sf10_r05_local.json vs 0.87 with a chunky layout). The
   * (replica x slice) grid decouples write parallelism from the
   * replica count; this spec pins both the layout and the exact
   * row-count contract in the low-replica regime. */

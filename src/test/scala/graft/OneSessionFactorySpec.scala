@@ -25,4 +25,9 @@ class OneSessionFactorySpec extends AnyFunSuite {
     val found = offenders("src/test", setters.mkString("|"), Set("SharedSpark.scala"))
     assert(found.isEmpty, found.mkString("\n", "\n", ""))
   }
+
+  test("no gate sets or unsets a session conf") {
+    val found = offenders("src/main/scala/graft/gates", """\bconf\s*\.\s*(set|unset)\s*\(""", Set.empty)
+    assert(found.isEmpty, found.mkString("\n", "\n", ""))
+  }
 }

@@ -3,6 +3,7 @@ package graft.pipeline
 import java.sql.Timestamp
 
 import graft.SharedSpark
+import graft.gates.TemporalGates.Temporal8hUs
 import org.scalatest.funsuite.AnyFunSuite
 
 /**
@@ -78,7 +79,7 @@ class TemporalSpec extends AnyFunSuite with SharedSpark {
 
   test("sessionize session count at sf0.001 is stable and 1-indexed") {
     val ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-    val sess = Temporal.sessionize(ev, PipelineQueries.Temporal8hUs).cache()
+    val sess = Temporal.sessionize(ev, Temporal8hUs).cache()
     try {
       val n = sess.count()
       assert(n > 0)
