@@ -187,10 +187,7 @@ class RustBloomServer(
       filters.remove(name) match {
         case None => NoExist
         case Some(_) =>
-          if (Files.exists(dir(name))) {
-            Files.list(dir(name)).forEach(Files.delete(_))
-            Files.delete(dir(name))
-          }
+          graft.util.Scratch.deleteTree(dir(name))
           Done
       }
   }

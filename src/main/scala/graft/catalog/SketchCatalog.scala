@@ -9,6 +9,7 @@ import org.apache.spark.sql.types.{BooleanType, StringType, StructField, StructT
 import java.nio.file.{Files, Path, Paths}
 import java.nio.charset.StandardCharsets.UTF_8
 import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 
 /**
  * The filter-manager / wire-operator surface of the reference
@@ -584,10 +585,8 @@ class SketchCatalog(
   private def restore(): Unit = {
     val root = Paths.get(dataDir)
     if (!Files.isDirectory(root)) return
-    val dirs = Files.list(root).iterator()
     val found = mutable.ArrayBuffer.empty[(String, Long, Double, Boolean)]
-    while (dirs.hasNext) {
-      val d = dirs.next()
+    listDir(root).foreach { d =>
       val fn = d.getFileName.toString
       if (fn.startsWith("bloomd.") && Files.exists(d.resolve("config.json"))) {
         val cfg = new String(Files.readAllBytes(d.resolve("config.json")), UTF_8)
@@ -613,6 +612,14 @@ class SketchCatalog(
 object SketchCatalog {
 
   private final val NoFilter = "Filter does not exist"
+
+  /** The entries of `dir`; the listing is closed before returning (an
+    * open `Files.list` stream holds a file descriptor). */
+  private def listDir(dir: Path): Seq[Path] = {
+    val listing = Files.list(dir)
+    try listing.iterator().asScala.toVector
+    finally listing.close()
+  }
 
   /** Byte budget for ONE broadcast-map probe chunk: `checkKeysMulti`
     * serializes and ships at most this many blob bytes at a time (a
@@ -718,12 +725,7 @@ object SketchCatalog {
       size = kv.getOrElse("size", "0").toLong,
       capacity = kv.getOrElse("capacity", "0").toLong,
       bytes = kv.getOrElse("bytes", "0").toLong)
-    val it = Files.list(dir).iterator()
-    val mmaps = scala.collection.mutable.ArrayBuffer.empty[Path]
-    while (it.hasNext) {
-      val p = it.next()
-      if (p.getFileName.toString.endsWith(".mmap")) mmaps += p
-    }
+    val mmaps = listDir(dir).filter(_.getFileName.toString.endsWith(".mmap"))
     val layers = scala.collection.mutable.ArrayBuffer.empty[(Int, graft.sketch.BloomFilter)]
     mmaps.sortBy(_.getFileName.toString).zipWithIndex.foreach { case (p, rung) =>
       layers += ((rung, graft.sketch.BloomFilter.deserialize(Files.readAllBytes(p))))

@@ -87,7 +87,7 @@ object CatalogGates {
     Gate("op_catalog_lifecycle", (s, dir) => {
       import s.implicits._
       val cat = new graft.catalog.SketchCatalog(s,
-        java.nio.file.Files.createTempDirectory("opcat").toString)
+        graft.util.Scratch.tempDir("opcat").toString)
       val keys = (0 until 1000).map(i => s"k$i").toDF("k")
       val steps = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String)]
       steps += ((1, "create foo", cat.create("foo", 20000, 0.001)))
@@ -148,7 +148,7 @@ object CatalogGates {
     Gate("op_multi_filter_check", (s, dir) => {
       import s.implicits._
       val cat = new graft.catalog.SketchCatalog(s,
-        java.nio.file.Files.createTempDirectory("opmulti").toString)
+        graft.util.Scratch.tempDir("opmulti").toString)
       cat.create("fa"); cat.create("fb")
       cat.setKeys("fa", Seq("a1", "a2", "shared").toDF("k"))
       cat.setKeys("fb", Seq("b1", "shared").toDF("k"))
@@ -174,12 +174,12 @@ object CatalogGates {
     Gate("op_export_roundtrip", (s, dir) => {
       import s.implicits._
       val cat = new graft.catalog.SketchCatalog(s,
-        java.nio.file.Files.createTempDirectory("opexp").toString)
+        graft.util.Scratch.tempDir("opexp").toString)
       val steps = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String)]
       steps += ((1, "create exf", cat.create("exf")))
       steps += ((2, "bulk 100 keys",
         if (cat.setKeys("exf", (0 until 100).map(i => s"xk$i").toDF("k")).isRight) "Done" else "Error"))
-      val dest = java.nio.file.Files.createTempDirectory("opexpdst")
+      val dest = graft.util.Scratch.tempDir("opexpdst")
       val out = cat.exportBloomd("exf", dest)
       steps += ((3, "export writes the C layout",
         out.toOption.map(_.getFileName.toString).getOrElse(out.left.getOrElse("?"))))
@@ -191,7 +191,7 @@ object CatalogGates {
         if (restored.contains("nope".getBytes(java.nio.charset.StandardCharsets.UTF_8))) "Yes" else "No"))
       steps += ((6, "ini initial_capacity", ini.initialCapacity.toString))
       steps += ((7, "ini size", ini.size.toString))
-      val rustRoot = java.nio.file.Files.createTempDirectory("opexprust")
+      val rustRoot = graft.util.Scratch.tempDir("opexprust")
       val rs = new graft.catalog.RustBloomServer(rustRoot.toString)
       steps += ((8, "rust create", rs.interpret("create rex")))
       steps += ((9, "rust set twice (count)", {
@@ -199,7 +199,7 @@ object CatalogGates {
       }))
       steps += ((10, "rust export", rs.exportRustDir("rex", rustRoot.resolve("out"))))
       val rs2 = new graft.catalog.RustBloomServer(
-        java.nio.file.Files.createTempDirectory("opexprust2").toString)
+        graft.util.Scratch.tempDir("opexprust2").toString)
       steps += ((11, "rust import on a second server",
         rs2.importRustDir(rustRoot.resolve("out").resolve("filter.rex"))))
       steps += ((12, "imported multiplicity", rs2.interpret("check rex kk")))
@@ -227,7 +227,7 @@ object CatalogGates {
     Gate("op_background_lifecycle", (s, dir) => {
       import s.implicits._
       val cat = new graft.catalog.SketchCatalog(s,
-        java.nio.file.Files.createTempDirectory("opbg").toString)
+        graft.util.Scratch.tempDir("opbg").toString)
       def cold(): String = { val c = cat.listCold(); if (c.isEmpty) "-" else c.mkString(",") }
       val steps = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String)]
       steps += ((1, "create f1", cat.create("f1")))

@@ -3,6 +3,7 @@ package graft.gates
 import graft.gates.Shared._
 import graft.gates.TemporalGates.Temporal8hUs
 import graft.pipeline._
+import graft.streaming.StreamSinks.{pinMtimes, stageFiles}
 import org.apache.spark.sql.functions._
 
 /** Streaming gates: each always-on operator drains a staged file
@@ -10,28 +11,6 @@ import org.apache.spark.sql.functions._
   * of pipeline_decontam and retrieval_bm25 sit beside those gates,
   * whose oracle they share. */
 object StreamingGates {
-
-  /** Pin ascending mtimes on the NEW parquet files under `in` (those
-    * not in `exclude`), filename order from `base` — the streaming
-    * gates' total control of file arrival order (the file source
-    * batches by mtime); ONE definition for every staged-stream gate.
-    * Returns the grown exclude set. */
-  private def pinMtimes(in: String)(base: Long, exclude: Set[String]): Set[String] = {
-    val listing = java.nio.file.Files.list(java.nio.file.Paths.get(in))
-    val ps = scala.collection.mutable.ArrayBuffer.empty[java.nio.file.Path]
-    try {
-      val parts = listing.iterator()
-      while (parts.hasNext) {
-        val p = parts.next()
-        if (p.toString.endsWith(".parquet") && !exclude.contains(p.toString)) ps += p
-      }
-    } finally listing.close()
-    ps.sortBy(_.getFileName.toString).zipWithIndex.foreach { case (p, i) =>
-      java.nio.file.Files.setLastModifiedTime(p,
-        java.nio.file.attribute.FileTime.fromMillis(base + i * 60000L))
-    }
-    exclude ++ ps.map(_.toString)
-  }
 
   val all: Seq[Gate] = Seq(
     // ---- streaming CDC apply (merge-per-batch) ---------------------------
@@ -360,7 +339,6 @@ object StreamingGates {
       import s.implicits._
       val tmp = graft.util.Scratch.tempDir("graftwmd")
       val in = tmp.resolve("in")
-      java.nio.file.Files.createDirectories(in)
       // UTC-anchored instants: Timestamp.valueOf would interpret the
       // wall time in the JVM default zone, breaking the oracle's UTC
       // string rendering on a non-UTC host
@@ -373,21 +351,7 @@ object StreamingGates {
         (3L, "filler doc", hour(11, 10)),
         (4L, "filler two", hour(11, 15)),  // batch wm 10:40 -> alpha evicted at commit
         (5L, "alpha text", hour(11, 30)))  // re-admitted after expiry
-      rows.zipWithIndex.foreach { case ((id, text, ts), i) =>
-        val stage = tmp.resolve(s"stage$i")
-        Seq((id, text, ts)).toDF("doc_id", "text", "ts")
-          .coalesce(1).write.mode("overwrite").parquet(stage.toString)
-        val part = java.nio.file.Files.list(stage).iterator()
-        while (part.hasNext) {
-          val p = part.next()
-          if (p.toString.endsWith(".parquet")) {
-            val dst = in.resolve(f"file$i%03d.parquet")
-            java.nio.file.Files.copy(p, dst)
-            java.nio.file.Files.setLastModifiedTime(dst,
-              java.nio.file.attribute.FileTime.fromMillis(1000000000000L + i * 60000L))
-          }
-        }
-      }
+      stageFiles(in, rows.map(r => Seq(r).toDF("doc_id", "text", "ts")))
       graft.streaming.StreamDedup.dedupWithinWatermark(s, in.toString,
           tmp.resolve("cp").toString, tmp.resolve("out").toString,
           tsCol = "ts", delay = "30 minutes", statePartitions = 4)

@@ -1,10 +1,10 @@
 package graft.streaming
 
 import graft.agg.GraftFunctions._
-import graft.sketch.{BloomFilter, Hll}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.sketch.{BloomFilter, FrequentItems, Hll, SketchCodec, TopK}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import scala.collection.concurrent.TrieMap
 
 /**
  * Incremental sketch maintenance with Structured Streaming — the
@@ -24,70 +24,22 @@ import org.apache.spark.sql.streaming.Trigger
  */
 object SketchStream {
 
-  /** Running state: source -> (bloom bytes, hll bytes, rows seen). */
-  final class SketchState {
-    val groups = new java.util.concurrent.ConcurrentHashMap[String, (Array[Byte], Array[Byte], Long)]()
-    var batches: Long = 0L
-
-    def mergeBatch(rows: Seq[(String, Array[Byte], Array[Byte], Long)]): Unit = synchronized {
-      batches += 1
-      rows.foreach { case (src, bloomBytes, hllBytes, n) =>
-        groups.compute(src, (_, prev) =>
-          if (prev == null) (bloomBytes, hllBytes, n)
-          else {
-            val bloom = BloomFilter.deserialize(prev._1)
-              .orInPlace(BloomFilter.deserialize(bloomBytes))
-            val hll = Hll.deserialize(prev._2).merge(Hll.deserialize(hllBytes))
-            (bloom.serialize(), hll.serialize(), prev._3 + n)
-          })
-      }
-    }
-  }
-
-  /**
-   * Streams the parquet files under `inDir` (schema`d file source,
-   * `maxFilesPerTrigger` files per micro-batch, AvailableNow so the
-   * run drains and terminates), building per-source token sketches
-   * incrementally. Returns the final merged state as a DataFrame
-   * (source, bloom, hll, n_rows, n_batches).
-   */
-  /** shared scaffolding: token-exploded file stream drained with
-    * AvailableNow through the given per-batch body */
-  private def drainTokenStream(spark: SparkSession, inDir: String,
-                               checkpointDir: String, maxFilesPerTrigger: Int)(
-      body: (DataFrame, Long) => Unit): Unit = {
-    val schema = spark.read.parquet(inDir).schema
-    val q = spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(inDir)
+  /** The token stream the sketch updaters drain: one (source, token)
+    * row per token of each arriving document. */
+  private def tokenStream(spark: SparkSession, inDir: String,
+                          maxFilesPerTrigger: Int): DataFrame =
+    StreamSinks.source(spark, inDir, maxFilesPerTrigger)
       .select(col("source"), explode(col("tokens")).as("token"))
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, id: Long) => body(batch, id) }
-      .start()
-    q.awaitTermination()
-  }
 
-  /** Like [[drainTokenStream]] but at document granularity
-    * (doc_id, n_tok, source) — for per-doc scored aggregates. */
-  private def drainDocStream(spark: SparkSession, inDir: String,
-                             checkpointDir: String, maxFilesPerTrigger: Int)(
-      body: (DataFrame, Long) => Unit): Unit = {
-    val schema = spark.read.parquet(inDir).schema
-    val q = spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(inDir)
-      .select(col("doc_id"), col("n_tok"), col("source"))
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, id: Long) => body(batch, id) }
-      .start()
-    q.awaitTermination()
-  }
+  /** Driver-side running state of one sketch column: merge each
+    * collected partial (one row per source) into `state` under its
+    * source name, through the family's codec. */
+  private def mergeByName[S <: AnyRef](state: TrieMap[String, S], codec: SketchCodec[S],
+                                       partials: Seq[Row], column: String): Unit =
+    partials.foreach { r =>
+      val part = codec.deserialize(r.getAs[Array[Byte]](column))
+      state.updateWith(r.getAs[String]("source"))(prev => Some(prev.fold(part)(codec.merge(_, part))))
+    }
 
   /**
    * Always-on exact top-k over the stream: per micro-batch TopK
@@ -101,49 +53,55 @@ object SketchStream {
   def runIncrementalTopK(spark: SparkSession, inDir: String, checkpointDir: String,
                          k: Int = 3, maxFilesPerTrigger: Int = 2): DataFrame = {
     import spark.implicits._
-    val state = new java.util.concurrent.ConcurrentHashMap[String, graft.sketch.TopK]()
-    var batches = 0L
-    drainDocStream(spark, inDir, checkpointDir, maxFilesPerTrigger) { (batch, _) =>
+    val state = TrieMap.empty[String, TopK]
+    val docs = StreamSinks.source(spark, inDir, maxFilesPerTrigger)
+      .select(col("doc_id"), col("n_tok"), col("source"))
+    val batches = StreamSinks.drain(docs, checkpointDir) { (batch, _) =>
       val partials = batch.groupBy("source")
         .agg(topk_agg(col("n_tok"), col("doc_id"), k).as("tk"))
         .collect()
-        .map(r => (r.getString(0), r.getAs[Array[Byte]](1)))
-      state.synchronized {
-        batches += 1
-        partials.foreach { case (src, bytes) =>
-          val part = graft.sketch.TopK.deserialize(bytes)
-          state.compute(src, (_, prev) => if (prev == null) part else prev.merge(part))
-        }
-      }
+      mergeByName(state, TopK, partials.toSeq, "tk")
     }
-    import scala.jdk.CollectionConverters._
-    val rows = state.asScala.toSeq.flatMap { case (src, tk) =>
+    val rows = state.toSeq.flatMap { case (src, tk) =>
       tk.result.zipWithIndex.map { case ((score, item), i) => (src, i + 1, score, item) }
     }
     rows.toDF("source", "rank", "n_tok", "doc_id")
       .withColumn("multi_batch_ok", lit(batches > 1))
   }
 
+  /**
+   * Streams the parquet files under `inDir` (`maxFilesPerTrigger`
+   * files per micro-batch, drained to the end of the input), building
+   * per-source token sketches incrementally. Returns the final merged
+   * state as a DataFrame (source, bloom, hll, n_rows, n_batches).
+   */
   def runIncremental(spark: SparkSession, inDir: String, checkpointDir: String,
                      capacity: Long = 100000L, fpProb: Double = 1e-4,
                      maxFilesPerTrigger: Int = 2): DataFrame = {
     import spark.implicits._
-    val state = new SketchState
-    drainTokenStream(spark, inDir, checkpointDir, maxFilesPerTrigger) { (batch, _) =>
-      val partials = batch.groupBy("source")
-        .agg(
-          bloom_agg(col("token").cast("string"), capacity, fpProb).as("bloom"),
-          hll_agg(col("token").cast("string"), 14).as("hll"),
-          count(lit(1)).as("n"))
-        .collect() // one small row per group: the sketch "flush"
-        .map(r => (r.getString(0), r.getAs[Array[Byte]](1), r.getAs[Array[Byte]](2), r.getLong(3)))
-        .toSeq
-      state.mergeBatch(partials)
+    val blooms = TrieMap.empty[String, BloomFilter]
+    val hlls = TrieMap.empty[String, Hll]
+    val rowCounts = TrieMap.empty[String, Long]
+    val batches = StreamSinks.drain(tokenStream(spark, inDir, maxFilesPerTrigger), checkpointDir) {
+      (batch, _) =>
+        val partials = batch.groupBy("source")
+          .agg(
+            bloom_agg(col("token").cast("string"), capacity, fpProb).as("bloom"),
+            hll_agg(col("token").cast("string"), 14).as("hll"),
+            count(lit(1)).as("n"))
+          .collect() // one small row per group: the sketch "flush"
+          .toSeq
+        mergeByName(blooms, BloomFilter, partials, "bloom")
+        mergeByName(hlls, Hll, partials, "hll")
+        partials.foreach { r =>
+          rowCounts.updateWith(r.getAs[String]("source"))(n => Some(n.getOrElse(0L) + r.getAs[Long]("n")))
+        }
     }
-    import scala.jdk.CollectionConverters._
-    val rows = state.groups.asScala.toSeq.map { case (src, (b, h, n)) => (src, b, h, n) }
+    val rows = blooms.toSeq.map { case (src, bloom) =>
+      (src, BloomFilter.serialize(bloom), Hll.serialize(hlls(src)), rowCounts(src))
+    }
     rows.toDF("source", "bloom", "hll", "n_rows")
-      .withColumn("n_batches", lit(state.batches))
+      .withColumn("n_batches", lit(batches))
   }
 
   /**
@@ -167,7 +125,7 @@ object SketchStream {
                             io: graft.catalog.SketchTableIO,
                             capacity: Long = 100000L, fpProb: Double = 1e-4,
                             maxFilesPerTrigger: Int = 2): DataFrame = {
-    drainTokenStream(spark, inDir, checkpointDir, maxFilesPerTrigger) { (batch, batchId) =>
+    StreamSinks.drain(tokenStream(spark, inDir, maxFilesPerTrigger), checkpointDir) { (batch, batchId) =>
       val already = io.currentVersion > 0 &&
         """"batch_id":(\d+)""".r
           .findFirstMatchIn(io.manifest(io.currentVersion))
@@ -201,23 +159,15 @@ object SketchStream {
   def runIncrementalFreq(spark: SparkSession, inDir: String, checkpointDir: String,
                          k: Int = 32, maxFilesPerTrigger: Int = 2): DataFrame = {
     import spark.implicits._
-    val state = new java.util.concurrent.ConcurrentHashMap[String, graft.sketch.FrequentItems]()
-    var batches = 0L
-    drainTokenStream(spark, inDir, checkpointDir, maxFilesPerTrigger) { (batch, _) =>
-      val partials = batch.groupBy("source")
-        .agg(freq_agg(col("token").cast("string"), k).as("freq"))
-        .collect() // one summary row per group — the sketch "flush"
-        .map(r => (r.getString(0), r.getAs[Array[Byte]](1)))
-      state.synchronized {
-        batches += 1
-        partials.foreach { case (src, bytes) =>
-          val part = graft.sketch.FrequentItems.deserialize(bytes)
-          state.compute(src, (_, prev) => if (prev == null) part else prev.merge(part))
-        }
-      }
+    val state = TrieMap.empty[String, FrequentItems]
+    val batches = StreamSinks.drain(tokenStream(spark, inDir, maxFilesPerTrigger), checkpointDir) {
+      (batch, _) =>
+        val partials = batch.groupBy("source")
+          .agg(freq_agg(col("token").cast("string"), k).as("freq"))
+          .collect() // one summary row per group — the sketch "flush"
+        mergeByName(state, FrequentItems, partials.toSeq, "freq")
     }
-    import scala.jdk.CollectionConverters._
-    state.asScala.toSeq.map { case (src, s) => (src, s.serialize()) }
+    state.toSeq.map { case (src, s) => (src, FrequentItems.serialize(s)) }
       .toDF("source", "freq")
       .withColumn("n_batches", lit(batches))
   }

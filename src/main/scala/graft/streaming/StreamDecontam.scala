@@ -4,7 +4,6 @@ import graft.agg.GraftFunctions._
 import graft.pipeline.TextFunctions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /**
  * Always-on decontamination — [[graft.pipeline.Decontam]] as a
@@ -70,31 +69,14 @@ object StreamDecontam {
     // write with the static-side build above — guide-style
     // independent-job overlap) join here, before the schema read
     awaitInput()
-    val schema = ss.read.parquet(inDir).schema
-    val docStream = ss.readStream.schema(schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(inDir)
+    val docStream = StreamSinks.source(ss, inDir, maxFilesPerTrigger)
       .select(col("doc_id").cast("long").as("doc_id"),
         shingles(words(col("text")), n).as("sh"))
-    StreamSinks.seed(spark,
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("doc_id", org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("n_overlap", org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("keep", org.apache.spark.sql.types.BooleanType))),
-      sinkDir)
-    val q = docStream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // the SAME scrub core as the batch operator — keep rules
-        // cannot drift between the two
-        val out = graft.pipeline.Decontam.scrubShingled(
-          batch, sketch, testGStatic, maxOverlap)
-        StreamSinks.appendBatch(out, batchId, sinkDir)
-      }
-      .start()
-    q.awaitTermination()
+    // the SAME scrub core as the batch operator — keep rules cannot
+    // drift between the two
+    StreamSinks.drainToSink(docStream, checkpointDir, sinkDir) { batch =>
+      graft.pipeline.Decontam.scrubShingled(batch, sketch, testGStatic, maxOverlap)
+    }
     testGStatic.unpersist()
     // the cached blocks are dropped and no plan reads the staging
     // parquet again — reclaim it (repeated runs would otherwise

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /**
  * Streaming exact deduplication — the always-on form of
@@ -34,33 +33,16 @@ object StreamDedup {
                  sinkDir: String, maxFilesPerTrigger: Int = 2,
                  statePartitions: Int = 8): DataFrame = {
     val ss = StreamSinks.sessionForState(spark, statePartitions)
-    val schema = ss.read.parquet(inDir).schema
-    val batches = new java.util.concurrent.atomic.AtomicLong(0L)
-
-    val stream = ss.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(inDir)
+    val stream = StreamSinks.source(ss, inDir, maxFilesPerTrigger)
       .select(md5(col("text")).as("fp"), col("doc_id").cast("long").as("doc_id"))
       .dropDuplicates("fp")
-
-    StreamSinks.seed(spark, stream.schema, sinkDir)
-    val q = stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batches.incrementAndGet() // driver-side bookkeeping, not row data
-        StreamSinks.appendBatch(batch, batchId, sinkDir)
-      }
-      .start()
-    q.awaitTermination()
+    val batches = StreamSinks.drainToSink(stream, checkpointDir, sinkDir)(identity)
 
     // stream idle after the AvailableNow drain: compact the changelog
     // (the gate reads — and oracles — the compacted layout)
     StreamSinks.compact(spark, sinkDir)
     StreamSinks.readAppend(spark, sinkDir)
-      .withColumn("n_batches", lit(batches.get()))
+      .withColumn("n_batches", lit(batches))
   }
 
   /**
@@ -79,25 +61,12 @@ object StreamDedup {
                            maxFilesPerTrigger: Int = 1,
                            statePartitions: Int = 8): DataFrame = {
     val ss = StreamSinks.sessionForState(spark, statePartitions)
-    val schema = ss.read.parquet(inDir).schema
-    val stream = ss.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(inDir)
+    val stream = StreamSinks.source(ss, inDir, maxFilesPerTrigger)
       .select(md5(col("text")).as("fp"), col("doc_id").cast("long").as("doc_id"),
         col(tsCol).cast("timestamp").as("ts"))
       .withWatermark("ts", delay)
       .dropDuplicatesWithinWatermark("fp")
-    StreamSinks.seed(spark, stream.schema, sinkDir)
-    val q = stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        StreamSinks.appendBatch(batch, batchId, sinkDir)
-      }
-      .start()
-    q.awaitTermination()
+    StreamSinks.drainToSink(stream, checkpointDir, sinkDir)(identity)
     StreamSinks.readAppend(spark, sinkDir)
   }
 }

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /**
  * Always-on incremental near-dedup — [[graft.pipeline.Dedup.dedupAgainst]]'s
@@ -65,47 +64,26 @@ object StreamDedupIncremental {
     // callers producing `inDir` concurrently (seed write overlapped
     // with the corpus shingle/index build above) join here
     awaitInput()
-    val schema = ss.read.parquet(inDir).schema
-    val docStream = ss.readStream.schema(schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(inDir)
+    val docStream = StreamSinks.source(ss, inDir, maxFilesPerTrigger)
       .select(col("doc_id").cast("long").as("id"), col("text"))
-    StreamSinks.seed(spark,
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("doc_id", org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("n_match_corpus", org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("keep", org.apache.spark.sql.types.BooleanType))),
-      sinkDir)
-    val q = docStream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val batchSh = batch.select(col("id"),
-          shingles(words(col("text")), 3).as("sh"))
-        val mc = Dedup.corpusMatches(batchSh, corpusShStatic, corpusIdxStatic,
-            minJ, numPerms, bands)
-          .groupBy(col("id_n").as("doc_id"))
-          .agg(count(lit(1)).as("mc"))
-        val out = batch.select(col("id").as("doc_id"))
-          .join(mc, Seq("doc_id"), "left")
-          .select(col("doc_id"),
-            coalesce(col("mc"), lit(0L)).as("n_match_corpus"))
-          .withColumn("keep", col("n_match_corpus") === 0)
-        StreamSinks.appendBatch(out, batchId, sinkDir)
-      }
-      .start()
-    q.awaitTermination()
+    StreamSinks.drainToSink(docStream, checkpointDir, sinkDir) { batch =>
+      val batchSh = batch.select(col("id"),
+        shingles(words(col("text")), 3).as("sh"))
+      val mc = Dedup.corpusMatches(batchSh, corpusShStatic, corpusIdxStatic,
+          minJ, numPerms, bands)
+        .groupBy(col("id_n").as("doc_id"))
+        .agg(count(lit(1)).as("mc"))
+      batch.select(col("id").as("doc_id"))
+        .join(mc, Seq("doc_id"), "left")
+        .select(col("doc_id"),
+          coalesce(col("mc"), lit(0L)).as("n_match_corpus"))
+        .withColumn("keep", col("n_match_corpus") === 0)
+    }
     corpusShStatic.unpersist()
     corpusIdxStatic.unpersist()
     // reclaim the operator-owned staging index (caller owns
     // checkpoint/sink dirs)
-    locally {
-      val walk = java.nio.file.Files.walk(stagingDir)
-      try walk.sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => java.nio.file.Files.deleteIfExists(p))
-      finally walk.close()
-    }
+    graft.util.Scratch.deleteTree(stagingDir)
     StreamSinks.compact(spark, sinkDir)
     StreamSinks.readAppend(spark, sinkDir)
   }

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /**
  * Stream-stream watermarked interval join — the streaming form of
@@ -40,15 +39,12 @@ object StreamJoins {
                    window: String, watermarkDelay: String = "10 minutes",
                    maxFilesPerTrigger: Int = 2, statePartitions: Int = 8): DataFrame = {
     val ss = StreamSinks.sessionForState(spark, statePartitions)
-    val schema = ss.read.parquet(inDir).schema
-    def side(tpe: String, idAs: String, tsAs: String, userAs: String) = ss.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(inDir)
-      .filter(col("event_type") === tpe)
-      .select(col("event_id").as(idAs), col("user_id").as(userAs),
-        col("ts").cast("timestamp").as(tsAs))
-      .withWatermark(tsAs, watermarkDelay)
+    def side(tpe: String, idAs: String, tsAs: String, userAs: String) =
+      StreamSinks.source(ss, inDir, maxFilesPerTrigger)
+        .filter(col("event_type") === tpe)
+        .select(col("event_id").as(idAs), col("user_id").as(userAs),
+          col("ts").cast("timestamp").as(tsAs))
+        .withWatermark(tsAs, watermarkDelay)
     val probe = side(probeType, "p_id", "p_ts", "p_user")
     val ref = side(refType, "c_id", "c_ts", "c_user")
     val joined = probe.join(ref, expr(
@@ -56,18 +52,7 @@ object StreamJoins {
       .select(col("p_user").as("user_id"), col("p_id"), col("c_id"),
         unix_micros(col("p_ts")).as("p_us"), unix_micros(col("c_ts")).as("c_us"),
         (unix_micros(col("p_ts")) - unix_micros(col("c_ts"))).as("lag_us"))
-
-    StreamSinks.seed(spark, joined.schema, sinkDir)
-    val q = joined.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        StreamSinks.appendBatch(batch, batchId, sinkDir)
-      }
-      .start()
-    q.awaitTermination()
-
+    StreamSinks.drainToSink(joined, checkpointDir, sinkDir)(identity)
     StreamSinks.compact(spark, sinkDir)
     StreamSinks.readAppend(spark, sinkDir)
   }

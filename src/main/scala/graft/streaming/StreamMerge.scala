@@ -2,7 +2,6 @@ package graft.streaming
 
 import graft.catalog.SketchTableIO
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.Trigger
 
 /**
  * Always-on table maintenance — [[SketchTableIO.mergeCommit]] driven
@@ -34,20 +33,9 @@ object StreamMerge {
                    key: String, checkpointDir: String,
                    maxFilesPerTrigger: Int = 1): DataFrame = {
     val t = new SketchTableIO(spark, tableRoot)
-    val schema = spark.read.parquet(inDir).schema
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(inDir)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        t.mergeCommit(batch, key)
-        ()
-      }
-      .start()
-    q.awaitTermination()
+    StreamSinks.drain(StreamSinks.source(spark, inDir, maxFilesPerTrigger), checkpointDir) {
+      (batch, _) => t.mergeCommit(batch, key)
+    }
     t.read()
   }
 }

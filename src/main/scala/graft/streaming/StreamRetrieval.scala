@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /**
  * Always-on retrieval — [[graft.pipeline.Retrieval]] as a Structured
@@ -57,37 +56,13 @@ object StreamRetrieval {
     // callers producing `inDir` concurrently (seed write overlapped
     // with the index/stats build above) join here
     awaitInput()
-    val schema = ss.read.parquet(inDir).schema
-    val qStream = ss.readStream.schema(schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(inDir)
-    StreamSinks.seed(spark,
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("q_id", org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("rank", org.apache.spark.sql.types.IntegerType),
-        org.apache.spark.sql.types.StructField("doc_id", org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("score_micros", org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("tfidf_micros", org.apache.spark.sql.types.LongType))),
-      sinkDir)
-    val q = qStream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val out = graft.pipeline.Retrieval.bm25FromIndex(
-          idxStatic, statsStatic, batch, k, k1, b, maxDf)
-        StreamSinks.appendBatch(out, batchId, sinkDir)
-      }
-      .start()
-    q.awaitTermination()
+    StreamSinks.drainToSink(StreamSinks.source(ss, inDir, maxFilesPerTrigger),
+        checkpointDir, sinkDir) { batch =>
+      graft.pipeline.Retrieval.bm25FromIndex(idxStatic, statsStatic, batch, k, k1, b, maxDf)
+    }
     idxStatic.unpersist()
     statsStatic.unpersist()
-    locally {
-      val walk = java.nio.file.Files.walk(scratch)
-      try walk.sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => java.nio.file.Files.deleteIfExists(p))
-      finally walk.close()
-    }
+    graft.util.Scratch.deleteTree(scratch)
     StreamSinks.compact(spark, sinkDir)
     StreamSinks.readAppend(spark, sinkDir)
   }

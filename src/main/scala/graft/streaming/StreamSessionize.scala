@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /**
  * Streaming gap sessionization — the always-on form of
@@ -52,11 +51,7 @@ object StreamSessionize {
                  sinkDir: String, gap: String, watermarkDelay: String = "10 minutes",
                  maxFilesPerTrigger: Int = 2, statePartitions: Int = 8): DataFrame = {
     val ss = StreamSinks.sessionForState(spark, statePartitions)
-    val schema = ss.read.parquet(inDir).schema
-    val stream = ss.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(inDir)
+    val stream = StreamSinks.source(ss, inDir, maxFilesPerTrigger)
       // source ts is TIMESTAMP_NTZ; the session is pinned to UTC so
       // casting to an instant preserves the wall time
       .withColumn("ts", col("ts").cast("timestamp"))
@@ -71,17 +66,7 @@ object StreamSessionize {
         unix_micros(col("w.end")).as("end_us"),
         col("n_events"), col("cents"), col("n_purchases"))
 
-    StreamSinks.seed(spark, stream.schema, sinkDir)
-    val q = stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        StreamSinks.appendBatch(batch, batchId, sinkDir)
-      }
-      .start()
-    q.awaitTermination()
-
+    StreamSinks.drainToSink(stream, checkpointDir, sinkDir)(identity)
     StreamSinks.compact(spark, sinkDir)
     StreamSinks.readAppend(spark, sinkDir)
       .filter(col("user_id") =!= lit(SentinelUser))

@@ -1,23 +1,31 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.util.Scratch
+import java.nio.file.{Files, Path}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.Trigger
+import scala.jdk.CollectionConverters._
 
 /**
- * Distributed result sinks for the always-on streaming operators.
+ * The file-stream lifecycle of every always-on streaming operator, in
+ * one place: staged inputs, the source, the drain, and the changelog
+ * sink. An operator states only its query and its per-batch body.
  *
  * The reference daemon runs forever and serves its state in place
  * (`csrc/bloomd/background.c` keeps filters current on disk); the
- * Spark-native analog is a streaming query whose foreachBatch APPENDS
- * each micro-batch to a parquet changelog directory — executors write
- * their own partitions, nothing is collected to the driver — and whose
- * result is a READ of that directory. For update-mode streams (upsert
- * per key per batch) the changelog is compacted on read with a
- * last-writer-wins window over the recorded batch id: exactly the
- * changelog-table + compaction-view pattern a lakehouse MERGE would
- * give us (parquet stands in for the table format here, same seam as
- * [[graft.catalog.SketchTableIO]]).
+ * Spark-native analog is a streaming query over a parquet file
+ * source ([[source]]), drained with `Trigger.AvailableNow` through a
+ * foreachBatch body ([[drain]]). The sink form ([[drainToSink]])
+ * APPENDS each micro-batch to a parquet changelog directory —
+ * executors write their own partitions, nothing is collected to the
+ * driver — and the operator's result is a READ of that directory.
+ * For update-mode streams (upsert per key per batch) the changelog is
+ * compacted on read with a last-writer-wins window over the recorded
+ * batch id: exactly the changelog-table + compaction-view pattern a
+ * lakehouse MERGE would give us (parquet stands in for the table
+ * format here, same seam as [[graft.catalog.SketchTableIO]]).
  */
 object StreamSinks {
 
@@ -44,6 +52,54 @@ object StreamSinks {
       s.conf.set("spark.sql.shuffle.partitions", statePartitions.toString)
       s
     }
+
+  /** The parquet files under `inDir` as a stream: read with the
+    * schema of the files already there, `maxFilesPerTrigger` files
+    * per micro-batch in modification-time order. */
+  def source(spark: SparkSession, inDir: String, maxFilesPerTrigger: Int): DataFrame = {
+    val schema = spark.read.parquet(inDir).schema
+    spark.readStream.schema(schema)
+      .option("maxFilesPerTrigger", maxFilesPerTrigger)
+      .parquet(inDir)
+  }
+
+  /** Run `stream` until its input is drained (`Trigger.AvailableNow`:
+    * every file present at start, then the query stops), calling
+    * `body(batch, batchId)` once per micro-batch on the driver.
+    * Returns how many micro-batches the body ran. */
+  def drain(stream: DataFrame, checkpointDir: String, outputMode: String = "append")(
+      body: (DataFrame, Long) => Unit): Long = {
+    // micro-batches run one after another on the stream's thread;
+    // the atomic publishes the count to the caller's thread
+    val batches = new java.util.concurrent.atomic.AtomicLong(0L)
+    stream.writeStream
+      .option("checkpointLocation", checkpointDir)
+      .outputMode(outputMode)
+      .trigger(Trigger.AvailableNow())
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        body(batch, batchId)
+        batches.incrementAndGet()
+        ()
+      }
+      .start()
+      .awaitTermination()
+    batches.get()
+  }
+
+  /** [[drain]] into the changelog at `sinkDir`: each micro-batch's
+    * `body(batch)` is appended under its batch id ([[appendBatch]]).
+    * The sink is first [[seed]]ed with the schema of `body` applied to
+    * an empty frame of the stream's schema — analysis only, nothing
+    * runs — so the seed and every batch agree by construction. */
+  def drainToSink(stream: DataFrame, checkpointDir: String, sinkDir: String,
+                  outputMode: String = "append")(body: DataFrame => DataFrame): Long = {
+    val ss = stream.sparkSession
+    val empty = ss.createDataFrame(java.util.Collections.emptyList[Row](), stream.schema)
+    seed(ss, body(empty).schema, sinkDir)
+    drain(stream, checkpointDir, outputMode) { (batch, batchId) =>
+      appendBatch(body(batch), batchId, sinkDir)
+    }
+  }
 
   /** foreachBatch body: write the micro-batch into its OWN partition
     * directory (`batch_id=N`), mode overwrite — a distributed write,
@@ -72,7 +128,7 @@ object StreamSinks {
     * reading the sink is well-defined even when every batch is empty. */
   def seed(spark: SparkSession, schema: org.apache.spark.sql.types.StructType,
            sinkDir: String): Unit =
-    spark.createDataFrame(java.util.Collections.emptyList[org.apache.spark.sql.Row](), schema)
+    spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
       .coalesce(1).write.mode("overwrite").parquet(s"$sinkDir/batch_id=-1")
 
   /** Append-mode result: each row was emitted exactly once. */
@@ -103,13 +159,6 @@ object StreamSinks {
     val legacyOld = Paths.get(sinkDir + ".old")
     val oldRoot = Paths.get(sinkDir + ".oldbatches")
     val tmpRoot = Paths.get(sinkDir + ".compacting")
-    def rmTree(p: java.nio.file.Path): Unit =
-      if (JFiles.exists(p)) {
-        val walk = JFiles.walk(p)
-        try walk.sorted(java.util.Comparator.reverseOrder())
-          .forEach(q => JFiles.deleteIfExists(q))
-        finally walk.close()
-      }
     def mv(a: java.nio.file.Path, b: java.nio.file.Path): Unit =
       try JFiles.move(a, b, StandardCopyOption.ATOMIC_MOVE)
       catch { case _: java.nio.file.AtomicMoveNotSupportedException => JFiles.move(a, b) }
@@ -117,7 +166,7 @@ object StreamSinks {
       if (!JFiles.exists(p)) Seq.empty
       else {
         val s = JFiles.list(p)
-        try { import scala.jdk.CollectionConverters._; s.iterator().asScala.toSeq }
+        try s.iterator().asScala.toSeq
         finally s.close()
       }
     // Legacy recovery: a WHOLE-TREE .old from the pre-incremental
@@ -133,7 +182,7 @@ object StreamSinks {
         if (JFiles.isDirectory(dir) && !JFiles.exists(dst) &&
           dir.getFileName.toString.startsWith("batch_id=")) mv(dir, dst)
       }
-      rmTree(legacyOld)
+      Scratch.deleteTree(legacyOld)
     }
     // Per-batch recovery: an entry under .oldbatches means a prior
     // per-batch swap died between its renames. If live lost the batch
@@ -141,10 +190,10 @@ object StreamSinks {
     // (crash after move-in), the saved copy is superseded garbage.
     ls(oldRoot).foreach { dir =>
       val dst = live.resolve(dir.getFileName)
-      if (!JFiles.exists(dst)) mv(dir, dst) else rmTree(dir)
+      if (!JFiles.exists(dst)) mv(dir, dst) else Scratch.deleteTree(dir)
     }
-    rmTree(oldRoot)
-    rmTree(tmpRoot) // always garbage: writes into it never committed
+    Scratch.deleteTree(oldRoot)
+    Scratch.deleteTree(tmpRoot) // always garbage: writes into it never committed
     // The dirty set: batch dirs still holding >1 data file. One data
     // file = already compacted (or written pre-coalesced) — skipped
     // untouched. A dir with a `_temporary` child is a batch COMMITTING
@@ -174,11 +223,11 @@ object StreamSinks {
       if (JFiles.exists(compacted)) {
         mv(d, oldRoot.resolve(name))
         mv(compacted, d)
-        rmTree(oldRoot.resolve(name))
+        Scratch.deleteTree(oldRoot.resolve(name))
       }
     }
-    rmTree(oldRoot)
-    rmTree(tmpRoot)
+    Scratch.deleteTree(oldRoot)
+    Scratch.deleteTree(tmpRoot)
   }
 
   /** Update-mode result: compact the changelog to the LAST emission
@@ -191,5 +240,44 @@ object StreamSinks {
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") === 1)
       .drop("rn", "batch_id")
+  }
+
+  /** The `.parquet` files directly under `dir`, in no particular
+    * order; the directory listing is closed before returning. */
+  private def parquetFiles(dir: Path): Seq[Path] = {
+    val listing = Files.list(dir)
+    try listing.iterator().asScala.filter(_.toString.endsWith(".parquet")).toVector
+    finally listing.close()
+  }
+
+  /** Pin ascending mtimes on the NEW parquet files under `in` (those
+    * not in `exclude`), filename order from `base`, one minute apart —
+    * total control of file arrival order for a staged stream (the
+    * file source batches by mtime). Returns the grown exclude set. */
+  def pinMtimes(in: String)(base: Long, exclude: Set[String]): Set[String] = {
+    val ps = parquetFiles(java.nio.file.Paths.get(in)).filterNot(p => exclude.contains(p.toString))
+    ps.sortBy(_.getFileName.toString).zipWithIndex.foreach { case (p, i) =>
+      Files.setLastModifiedTime(p, java.nio.file.attribute.FileTime.fromMillis(base + i * 60000L))
+    }
+    exclude ++ ps.map(_.toString)
+  }
+
+  /** Stage `frames` as a one-file-per-trigger stream input: frame `i`
+    * is written as one parquet file, copied to `in/file<iii>.parquet`
+    * and given mtime `base + i` minutes, so a `maxFilesPerTrigger = 1`
+    * drain replays one frame per micro-batch, in order. Each frame's
+    * write directory (`stage<i>` beside `in`) is deleted once copied. */
+  def stageFiles(in: Path, frames: Seq[DataFrame], base: Long = 1000000000000L): Unit = {
+    Files.createDirectories(in)
+    frames.zipWithIndex.foreach { case (frame, i) =>
+      val stage = in.resolveSibling(s"stage$i")
+      frame.coalesce(1).write.mode("overwrite").parquet(stage.toString)
+      parquetFiles(stage).foreach { p =>
+        val dst = in.resolve(f"file$i%03d.parquet")
+        Files.copy(p, dst)
+        Files.setLastModifiedTime(dst, java.nio.file.attribute.FileTime.fromMillis(base + i * 60000L))
+      }
+      Scratch.deleteTree(stage)
+    }
   }
 }

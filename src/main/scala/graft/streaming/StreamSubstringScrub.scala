@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /**
  * Always-on exact-substring scrub — [[graft.pipeline.Dedup.substringDedup]]'s
@@ -63,41 +62,19 @@ object StreamSubstringScrub {
     // callers producing `inDir` concurrently (seed write overlapped
     // with the corpus window-key build above) join here
     awaitInput()
-    val schema = ss.read.parquet(inDir).schema
-    val docStream = ss.readStream.schema(schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(inDir)
+    val docStream = StreamSinks.source(ss, inDir, maxFilesPerTrigger)
       .select(col("doc_id"), col("tokens"))
-    StreamSinks.seed(spark,
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("doc_id", org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("n_tok", org.apache.spark.sql.types.IntegerType),
-        org.apache.spark.sql.types.StructField("n_dup_windows", org.apache.spark.sql.types.IntegerType),
-        org.apache.spark.sql.types.StructField("n_cut", org.apache.spark.sql.types.IntegerType),
-        org.apache.spark.sql.types.StructField("clean_csv", org.apache.spark.sql.types.StringType))),
-      sinkDir)
-    val q = docStream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val base = Dedup.substringBase(batch)
-        val flagged = Dedup.substringWindows(base, L)
-          .join(corpusKeys, Seq("wkey"), "left_semi")
-          .select("doc_id", "pos")
-        StreamSinks.appendBatch(Dedup.cutFlagged(base, flagged, L), batchId, sinkDir)
-      }
-      .start()
-    q.awaitTermination()
+    StreamSinks.drainToSink(docStream, checkpointDir, sinkDir) { batch =>
+      val base = Dedup.substringBase(batch)
+      val flagged = Dedup.substringWindows(base, L)
+        .join(corpusKeys, Seq("wkey"), "left_semi")
+        .select("doc_id", "pos")
+      Dedup.cutFlagged(base, flagged, L)
+    }
     corpusKeys.unpersist()
     // reclaim the operator-owned staging index (caller owns
     // checkpoint/sink dirs)
-    locally {
-      val walk = java.nio.file.Files.walk(stagingDir)
-      try walk.sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => java.nio.file.Files.deleteIfExists(p))
-      finally walk.close()
-    }
+    graft.util.Scratch.deleteTree(stagingDir)
     StreamSinks.compact(spark, sinkDir)
     StreamSinks.readAppend(spark, sinkDir)
   }

@@ -6,7 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.Encoders
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode,
-  StatefulProcessor, TimeMode, TimerValues, Trigger, TTLConfig, ValueState}
+  StatefulProcessor, TimeMode, TimerValues, TTLConfig, ValueState}
 
 /**
  * Event-time streaming over the `events` table: watermarked windowed
@@ -14,9 +14,9 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
  * mapGroupsWithState — the two Structured Streaming shapes the
  * engine supports beyond foreachBatch merge (SURVEY.md §2.5).
  *
- * Both drain a file source with Trigger.AvailableNow in update mode;
- * foreachBatch appends each batch's upserts to a parquet changelog
- * sink ([[StreamSinks]]); the compaction view (last emission per key)
+ * Both drain a file source in update mode through
+ * [[StreamSinks.drainToSink]], which appends each batch's upserts to a
+ * parquet changelog sink; the compaction view (last emission per key)
  * is the fully-aggregated state — asserted equal to the one-shot
  * batch computation on the same input. No operator collects result
  * rows to the driver: the sink write is distributed and the result
@@ -34,10 +34,7 @@ object WindowedSketch {
   def windowedHll(spark: SparkSession, inDir: String, checkpointDir: String,
                   sinkDir: String, statePartitions: Int = 8): DataFrame = {
     val ss = StreamSinks.sessionForState(spark, statePartitions)
-    val schema = ss.read.parquet(inDir).schema
-    val stream = ss.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 2)
-      .parquet(inDir)
+    val stream = StreamSinks.source(ss, inDir, maxFilesPerTrigger = 2)
       // source ts is TIMESTAMP_NTZ; watermarks need an instant — the
       // session is pinned to UTC so the wall time is preserved
       .withColumn("ts", col("ts").cast("timestamp"))
@@ -46,16 +43,7 @@ object WindowedSketch {
       .agg(hll_agg(col("user_id").cast("string"), 14).as("users_hll"),
         count(lit(1)).as("n_events"))
       .select(col("w.start").as("ws"), col("event_type"), col("users_hll"), col("n_events"))
-    StreamSinks.seed(spark, stream.schema, sinkDir)
-    val q = stream.writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        StreamSinks.appendBatch(batch, batchId, sinkDir)
-      }
-      .start()
-    q.awaitTermination()
+    StreamSinks.drainToSink(stream, checkpointDir, sinkDir, outputMode = "update")(identity)
     // drain done -> stream idle: the compaction window. The gate's
     // oracle then reads the COMPACTED changelog, so read-equivalence
     // across compaction is continuously proven, not just unit-tested.
@@ -97,38 +85,21 @@ object WindowedSketch {
                     sinkDir: String, statePartitions: Int = 8): DataFrame = {
     val ss = StreamSinks.sessionForState(spark, statePartitions)
     import ss.implicits._
-    val schema = ss.read.parquet(inDir).schema
 
     def updateState(userId: Long, rows: Iterator[(Long, String)],
                     state: GroupState[Array[Byte]]): (Long, Long) = {
-      val bloom =
-        if (state.exists) BloomFilter.deserialize(state.get)
-        else BloomFilter.create(20000L, 1e-4)
-      rows.foreach { case (_, et) =>
-        bloom.addKey(et.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      }
-      state.update(bloom.serialize())
-      (userId, bloom.count)
+      val (bloom, n) = UserTypeBloom.add(state.getOption, rows)
+      state.update(bloom)
+      (userId, n)
     }
 
-    val stream = ss.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 2)
-      .parquet(inDir)
+    val stream = StreamSinks.source(ss, inDir, maxFilesPerTrigger = 2)
       .select(col("user_id").cast("long"), col("event_type"))
       .as[(Long, String)]
       .groupByKey(_._1)
       .mapGroupsWithState(GroupStateTimeout.NoTimeout())(updateState)
       .toDF("user_id", "n_types_sketch")
-    StreamSinks.seed(spark, stream.schema, sinkDir)
-    val q = stream.writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        StreamSinks.appendBatch(batch, batchId, sinkDir)
-      }
-      .start()
-    q.awaitTermination()
+    StreamSinks.drainToSink(stream, checkpointDir, sinkDir, outputMode = "update")(identity)
     StreamSinks.readLatestByKey(spark, sinkDir, Seq("user_id"))
   }
 
@@ -148,14 +119,9 @@ object WindowedSketch {
 
     override def handleInputRows(key: Long, rows: Iterator[(Long, String)],
                                  timerValues: TimerValues): Iterator[(Long, Long)] = {
-      val bloom =
-        if (bloomState.exists()) BloomFilter.deserialize(bloomState.get())
-        else BloomFilter.create(20000L, 1e-4)
-      rows.foreach { case (_, et) =>
-        bloom.addKey(et.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      }
-      bloomState.update(bloom.serialize())
-      Iterator.single((key, bloom.count))
+      val (bloom, n) = UserTypeBloom.add(Option.when(bloomState.exists())(bloomState.get()), rows)
+      bloomState.update(bloom)
+      Iterator.single((key, n))
     }
   }
 
@@ -165,25 +131,13 @@ object WindowedSketch {
     import ss.implicits._
     ss.conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val schema = ss.read.parquet(inDir).schema
-    val stream = ss.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 2)
-      .parquet(inDir)
+    val stream = StreamSinks.source(ss, inDir, maxFilesPerTrigger = 2)
       .select(col("user_id").cast("long"), col("event_type"))
       .as[(Long, String)]
       .groupByKey(_._1)
       .transformWithState(new UserTypeProcessor, TimeMode.None(), OutputMode.Update())
       .toDF("user_id", "n_types_sketch")
-    StreamSinks.seed(spark, stream.schema, sinkDir)
-    val q = stream.writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        StreamSinks.appendBatch(batch, batchId, sinkDir)
-      }
-      .start()
-    q.awaitTermination()
+    StreamSinks.drainToSink(stream, checkpointDir, sinkDir, outputMode = "update")(identity)
     StreamSinks.readLatestByKey(spark, sinkDir, Seq("user_id"))
   }
 
@@ -203,4 +157,19 @@ object WindowedSketch {
       .select(col("user_id"), coalesce(col("n_exact"), lit(-1L)).as("n_types_exact"),
         (col("n_types_sketch") === col("n_exact")).as("state_ok"))
       .orderBy("user_id")
+}
+
+/** The per-user state update both state APIs run: add the batch's
+  * event types to the user's serialized bloom (a fresh one on first
+  * sight); returns the new state and its distinct-type count. A
+  * top-level object, so the mapGroupsWithState function that calls it
+  * captures nothing and serializes to executors. */
+private object UserTypeBloom {
+  def add(state: Option[Array[Byte]], rows: Iterator[(Long, String)]): (Array[Byte], Long) = {
+    val bloom = state.fold(BloomFilter.create(20000L, 1e-4))(BloomFilter.deserialize)
+    rows.foreach { case (_, et) =>
+      bloom.addKey(et.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    }
+    (bloom.serialize(), bloom.count)
+  }
 }

@@ -69,4 +69,25 @@ class RustServerSpec extends AnyFunSuite {
     expect("drop filter", "Done")
     expect("drop filter", "Filter does not exist")
   }
+
+  test("drop leaves no file descriptor open") {
+    val fds = java.nio.file.Paths.get("/proc/self/fd")
+    assume(java.nio.file.Files.isDirectory(fds), "needs /proc/self/fd to count open descriptors")
+    def openFds(): Long = {
+      val l = java.nio.file.Files.list(fds)
+      try l.count() finally l.close()
+    }
+    val dir = java.nio.file.Files.createTempDirectory("rustfd")
+    val srv = new RustBloomServer(dir.toString)
+    System.gc()
+    val before = openFds()
+    (1 to 300).foreach { i =>
+      assert(srv.interpret(s"create f$i capacity=1000") == "Done")
+      assert(srv.interpret(s"drop f$i") == "Done")
+    }
+    System.gc()
+    val grown = openFds() - before
+    assert(grown < 30, s"300 create/drop cycles left $grown more descriptors open")
+    graft.util.Scratch.deleteTree(dir)
+  }
 }

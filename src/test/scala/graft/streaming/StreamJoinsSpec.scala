@@ -18,7 +18,6 @@ class StreamJoinsSpec extends AnyFunSuite with SharedSpark {
     import spark.implicits._
     val tmp = java.nio.file.Files.createTempDirectory("sijspec")
     val in = tmp.resolve("in")
-    java.nio.file.Files.createDirectories(in)
     // window = 1 hour; probe=purchase, ref=click, pair iff same user
     // and c_ts in [p_ts - 1h, p_ts]
     val files = Seq(
@@ -30,21 +29,8 @@ class StreamJoinsSpec extends AnyFunSuite with SharedSpark {
           (5L, ts(10, 1), 2L, "purchase", 1.0, "{}")), // 9:00 click now OUTSIDE 1h: no pair
       Seq((6L, ts(10, 30), 1L, "click", 0.0, "{}"))  // click AFTER uid1's purchase: no pair
     )
-    files.zipWithIndex.foreach { case (rows, i) =>
-      val stage = tmp.resolve(s"stage$i")
-      rows.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-        .coalesce(1).write.mode("overwrite").parquet(stage.toString)
-      val it = java.nio.file.Files.list(stage).iterator()
-      while (it.hasNext) {
-        val p = it.next()
-        if (p.toString.endsWith(".parquet")) {
-          val dst = in.resolve(f"file$i%03d.parquet")
-          java.nio.file.Files.copy(p, dst)
-          java.nio.file.Files.setLastModifiedTime(dst,
-            java.nio.file.attribute.FileTime.fromMillis(1000000000000L + i * 60000L))
-        }
-      }
-    }
+    StreamSinks.stageFiles(in,
+      files.map(_.toDF("event_id", "ts", "user_id", "event_type", "value", "props")))
     val out = StreamJoins.intervalJoin(
         spark, in.toString, tmp.resolve("cp").toString, tmp.resolve("out").toString,
         probeType = "purchase", refType = "click", window = "1 hour",

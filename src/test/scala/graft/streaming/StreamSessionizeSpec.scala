@@ -21,7 +21,6 @@ class StreamSessionizeSpec extends AnyFunSuite with SharedSpark {
     import spark.implicits._
     val tmp = java.nio.file.Files.createTempDirectory("sessspec")
     val in = tmp.resolve("in")
-    java.nio.file.Files.createDirectories(in)
     // file-at-a-time replay in event-time order; last file is the
     // watermark-advancing sentinel (2 gaps past the corpus max)
     val files = Seq(
@@ -32,21 +31,8 @@ class StreamSessionizeSpec extends AnyFunSuite with SharedSpark {
       Seq((4L, ts(10, 21), 1L, "click", 4.0, "{}")),    // 11 min gap -> new session
       Seq((5L, ts(12, 0), StreamSessionize.SentinelUser, "sentinel", 0.0, "{}"))
     )
-    files.zipWithIndex.foreach { case (rows, i) =>
-      val stage = tmp.resolve(s"stage$i")
-      val df = rows.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-      df.coalesce(1).write.mode("overwrite").parquet(stage.toString)
-      val it = java.nio.file.Files.list(stage).iterator()
-      while (it.hasNext) {
-        val p = it.next()
-        if (p.toString.endsWith(".parquet")) {
-          val dst = in.resolve(f"file$i%03d.parquet")
-          java.nio.file.Files.copy(p, dst)
-          java.nio.file.Files.setLastModifiedTime(dst,
-            java.nio.file.attribute.FileTime.fromMillis(1000000000000L + i * 60000L))
-        }
-      }
-    }
+    StreamSinks.stageFiles(in,
+      files.map(_.toDF("event_id", "ts", "user_id", "event_type", "value", "props")))
     val streamed = StreamSessionize.sessionize(
       spark, in.toString, tmp.resolve("cp").toString, tmp.resolve("out").toString,
       gap = "10 minutes", watermarkDelay = "1 minute", maxFilesPerTrigger = 1)

@@ -126,7 +126,6 @@ class StreamSpec extends AnyFunSuite with SharedSpark {
       import spark.implicits._
       val tmp = java.nio.file.Files.createTempDirectory("wmdedup")
       val in = tmp.resolve("in")
-      java.nio.file.Files.createDirectories(in)
       // one row per FILE, one file per trigger, mtimes pinned ascending:
       // arrival order and watermark advancement are fully deterministic
       def hour(h: Int, m: Int) = java.sql.Timestamp.valueOf(f"2026-01-01 $h%02d:$m%02d:00")
@@ -143,21 +142,7 @@ class StreamSpec extends AnyFunSuite with SharedSpark {
         (4L, "filler two", hour(11, 15)),  // batch wm 10:40 -> alpha evicted at commit
         (5L, "alpha text", hour(11, 30))   // horizon long passed -> re-admitted
       )
-      rows.zipWithIndex.foreach { case ((id, text, ts), i) =>
-        val stage = tmp.resolve(s"stage$i")
-        Seq((id, text, ts)).toDF("doc_id", "text", "ts")
-          .coalesce(1).write.mode("overwrite").parquet(stage.toString)
-        val part = java.nio.file.Files.list(stage).iterator()
-        while (part.hasNext) {
-          val p = part.next()
-          if (p.toString.endsWith(".parquet")) {
-            val dst = in.resolve(f"file$i%03d.parquet")
-            java.nio.file.Files.copy(p, dst)
-            java.nio.file.Files.setLastModifiedTime(dst,
-              java.nio.file.attribute.FileTime.fromMillis(1000000000000L + i * 60000L))
-          }
-        }
-      }
+      StreamSinks.stageFiles(in, rows.map(r => Seq(r).toDF("doc_id", "text", "ts")))
       val kept = StreamDedup.dedupWithinWatermark(spark, in.toString,
           tmp.resolve("cp").toString, tmp.resolve("out").toString,
           tsCol = "ts", delay = "30 minutes")
