@@ -9,7 +9,6 @@ import org.apache.spark.sql.types.{BooleanType, StringType, StructField, StructT
 import java.nio.file.{Files, Path, Paths}
 import java.nio.charset.StandardCharsets.UTF_8
 import scala.collection.mutable
-import scala.jdk.CollectionConverters._
 
 /**
  * The filter-manager / wire-operator surface of the reference
@@ -176,7 +175,7 @@ class SketchCatalog(
             // finishes before the delete starts, and every persist
             // that begins after drop no-ops on the flag — so the
             // delete is the LAST write to the directory
-            locked(e, write = true) { deleteRecursively(filterDir(name)) }
+            locked(e, write = true) { graft.util.Scratch.deleteTree(filterDir(name)) }
           } finally pendingDeletes.remove(name)
       })
       "Done"
@@ -586,7 +585,7 @@ class SketchCatalog(
     val root = Paths.get(dataDir)
     if (!Files.isDirectory(root)) return
     val found = mutable.ArrayBuffer.empty[(String, Long, Double, Boolean)]
-    listDir(root).foreach { d =>
+    graft.util.Scratch.list(root).foreach { d =>
       val fn = d.getFileName.toString
       if (fn.startsWith("bloomd.") && Files.exists(d.resolve("config.json"))) {
         val cfg = new String(Files.readAllBytes(d.resolve("config.json")), UTF_8)
@@ -600,26 +599,11 @@ class SketchCatalog(
       registry(name) = new Entry(name, cap, p, inMem, None)
     }
   }
-
-  private def deleteRecursively(p: Path): Unit = {
-    if (Files.exists(p)) {
-      Files.walk(p).sorted(java.util.Comparator.reverseOrder())
-        .forEach(f => Files.delete(f))
-    }
-  }
 }
 
 object SketchCatalog {
 
   private final val NoFilter = "Filter does not exist"
-
-  /** The entries of `dir`; the listing is closed before returning (an
-    * open `Files.list` stream holds a file descriptor). */
-  private def listDir(dir: Path): Seq[Path] = {
-    val listing = Files.list(dir)
-    try listing.iterator().asScala.toVector
-    finally listing.close()
-  }
 
   /** Byte budget for ONE broadcast-map probe chunk: `checkKeysMulti`
     * serializes and ships at most this many blob bytes at a time (a
@@ -725,7 +709,7 @@ object SketchCatalog {
       size = kv.getOrElse("size", "0").toLong,
       capacity = kv.getOrElse("capacity", "0").toLong,
       bytes = kv.getOrElse("bytes", "0").toLong)
-    val mmaps = listDir(dir).filter(_.getFileName.toString.endsWith(".mmap"))
+    val mmaps = graft.util.Scratch.list(dir).filter(_.getFileName.toString.endsWith(".mmap"))
     val layers = scala.collection.mutable.ArrayBuffer.empty[(Int, graft.sketch.BloomFilter)]
     mmaps.sortBy(_.getFileName.toString).zipWithIndex.foreach { case (p, rung) =>
       layers += ((rung, graft.sketch.BloomFilter.deserialize(Files.readAllBytes(p))))

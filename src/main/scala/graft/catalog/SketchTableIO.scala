@@ -28,19 +28,11 @@ class SketchTableIO(val spark: SparkSession, val root: String) {
 
   Files.createDirectories(manifestDir)
 
-  def versions: Seq[Long] = {
-    val list = Files.list(manifestDir)
-    try {
-      val it = list.iterator()
-      val vs = scala.collection.mutable.ArrayBuffer.empty[Long]
-      while (it.hasNext) {
-        val n = it.next().getFileName.toString
-        if (n.startsWith("v") && n.endsWith(".json"))
-          vs += n.stripPrefix("v").stripSuffix(".json").toLong
-      }
-      vs.toSeq.sorted
-    } finally list.close()
-  }
+  def versions: Seq[Long] =
+    graft.util.Scratch.list(manifestDir).map(_.getFileName.toString)
+      .filter(n => n.startsWith("v") && n.endsWith(".json"))
+      .map(_.stripPrefix("v").stripSuffix(".json").toLong)
+      .sorted
 
   def currentVersion: Long = versions.lastOption.getOrElse(0L)
 
@@ -73,15 +65,8 @@ class SketchTableIO(val spark: SparkSession, val root: String) {
         case e: java.nio.file.FileSystemException if Files.exists(dataDir(v)) => v += 1
       }
     }
-    val listing = Files.list(dataDir(v))
-    val fileList = scala.collection.mutable.ArrayBuffer.empty[String]
-    try {
-      val files = listing.iterator()
-      while (files.hasNext) {
-        val p = files.next()
-        if (p.getFileName.toString.endsWith(".parquet")) fileList += p.toString
-      }
-    } finally listing.close()
+    val fileList = graft.util.Scratch.list(dataDir(v))
+      .filter(_.getFileName.toString.endsWith(".parquet")).map(_.toString)
     // manifest row count from the parquet FOOTERS (each footer's row
     // groups carry exact counts) — a driver-side metadata read per
     // file instead of a Spark count() job per commit (the streaming
@@ -234,21 +219,14 @@ class SketchTableIO(val spark: SparkSession, val root: String) {
           case _: java.io.IOException | _: java.io.UncheckedIOException =>
             Long.MaxValue
         }
-      val list = Files.list(dataRoot)
-      val orphans = try {
-        val it = list.iterator()
-        val acc = scala.collection.mutable.ArrayBuffer.empty[java.nio.file.Path]
-        val cutoff = System.currentTimeMillis() - orphanAgeMs
-        while (it.hasNext) {
-          val p = it.next()
-          val n = p.getFileName.toString
-          val published = n.startsWith("v") && n.length > 1 &&
-            n.stripPrefix("v").forall(_.isDigit) &&
-            Files.exists(manifestPath(n.stripPrefix("v").toLong))
-          if (!published && newestMtime(p) < cutoff) acc += p
-        }
-        acc
-      } finally list.close()
+      val cutoff = System.currentTimeMillis() - orphanAgeMs
+      val orphans = graft.util.Scratch.list(dataRoot).filter { p =>
+        val n = p.getFileName.toString
+        val published = n.startsWith("v") && n.length > 1 &&
+          n.stripPrefix("v").forall(_.isDigit) &&
+          Files.exists(manifestPath(n.stripPrefix("v").toLong))
+        !published && newestMtime(p) < cutoff
+      }
       orphans.foreach(deleteTree)
     }
     expire

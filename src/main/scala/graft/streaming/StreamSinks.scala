@@ -6,7 +6,6 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
-import scala.jdk.CollectionConverters._
 
 /**
  * The file-stream lifecycle of every always-on streaming operator, in
@@ -162,13 +161,6 @@ object StreamSinks {
     def mv(a: java.nio.file.Path, b: java.nio.file.Path): Unit =
       try JFiles.move(a, b, StandardCopyOption.ATOMIC_MOVE)
       catch { case _: java.nio.file.AtomicMoveNotSupportedException => JFiles.move(a, b) }
-    def ls(p: java.nio.file.Path): Seq[java.nio.file.Path] =
-      if (!JFiles.exists(p)) Seq.empty
-      else {
-        val s = JFiles.list(p)
-        try s.iterator().asScala.toSeq
-        finally s.close()
-      }
     // Legacy recovery: a WHOLE-TREE .old from the pre-incremental
     // protocol is not safely deletable — a crash between its two
     // renames left .old as the only complete copy. Merge any batch
@@ -177,7 +169,7 @@ object StreamSinks {
     // semantics), then drop the tree.
     if (JFiles.exists(legacyOld)) {
       JFiles.createDirectories(live)
-      ls(legacyOld).foreach { dir =>
+      Scratch.list(legacyOld).foreach { dir =>
         val dst = live.resolve(dir.getFileName)
         if (JFiles.isDirectory(dir) && !JFiles.exists(dst) &&
           dir.getFileName.toString.startsWith("batch_id=")) mv(dir, dst)
@@ -188,7 +180,7 @@ object StreamSinks {
     // per-batch swap died between its renames. If live lost the batch
     // (crash after move-out), restore the original; if live has it
     // (crash after move-in), the saved copy is superseded garbage.
-    ls(oldRoot).foreach { dir =>
+    Scratch.list(oldRoot).foreach { dir =>
       val dst = live.resolve(dir.getFileName)
       if (!JFiles.exists(dst)) mv(dir, dst) else Scratch.deleteTree(dir)
     }
@@ -198,9 +190,9 @@ object StreamSinks {
     // file = already compacted (or written pre-coalesced) — skipped
     // untouched. A dir with a `_temporary` child is a batch COMMITTING
     // RIGHT NOW — skipped this round, compacted next time.
-    val dirty = ls(live).filter { d =>
+    val dirty = Scratch.list(live).filter { d =>
       JFiles.isDirectory(d) && d.getFileName.toString.startsWith("batch_id=") && {
-        val kids = ls(d)
+        val kids = Scratch.list(d)
         kids.count(_.getFileName.toString.startsWith("part-")) > 1 &&
           !kids.exists(_.getFileName.toString == "_temporary")
       }
@@ -242,20 +234,13 @@ object StreamSinks {
       .drop("rn", "batch_id")
   }
 
-  /** The `.parquet` files directly under `dir`, in no particular
-    * order; the directory listing is closed before returning. */
-  private def parquetFiles(dir: Path): Seq[Path] = {
-    val listing = Files.list(dir)
-    try listing.iterator().asScala.filter(_.toString.endsWith(".parquet")).toVector
-    finally listing.close()
-  }
-
   /** Pin ascending mtimes on the NEW parquet files under `in` (those
     * not in `exclude`), filename order from `base`, one minute apart —
     * total control of file arrival order for a staged stream (the
     * file source batches by mtime). Returns the grown exclude set. */
   def pinMtimes(in: String)(base: Long, exclude: Set[String]): Set[String] = {
-    val ps = parquetFiles(java.nio.file.Paths.get(in)).filterNot(p => exclude.contains(p.toString))
+    val ps = Scratch.list(java.nio.file.Paths.get(in))
+      .filter(p => p.toString.endsWith(".parquet") && !exclude.contains(p.toString))
     ps.sortBy(_.getFileName.toString).zipWithIndex.foreach { case (p, i) =>
       Files.setLastModifiedTime(p, java.nio.file.attribute.FileTime.fromMillis(base + i * 60000L))
     }
@@ -263,21 +248,20 @@ object StreamSinks {
   }
 
   /** Stage `frames` as a one-file-per-trigger stream input: frame `i`
-    * is written as one parquet file, copied to `in/file<iii>.parquet`
-    * and given mtime `base + i` minutes, so a `maxFilesPerTrigger = 1`
-    * drain replays one frame per micro-batch, in order. Each frame's
-    * write directory (`stage<i>` beside `in`) is deleted once copied. */
-  def stageFiles(in: Path, frames: Seq[DataFrame], base: Long = 1000000000000L): Unit = {
+    * is written as one parquet file and copied to `in/file<iii>.parquet`;
+    * [[pinMtimes]] then orders the files by name, so a
+    * `maxFilesPerTrigger = 1` drain replays one frame per micro-batch,
+    * in order. Each frame's write directory (`stage<i>` beside `in`) is
+    * deleted once copied. */
+  def stageFiles(in: Path, frames: Seq[DataFrame]): Unit = {
     Files.createDirectories(in)
     frames.zipWithIndex.foreach { case (frame, i) =>
       val stage = in.resolveSibling(s"stage$i")
       frame.coalesce(1).write.mode("overwrite").parquet(stage.toString)
-      parquetFiles(stage).foreach { p =>
-        val dst = in.resolve(f"file$i%03d.parquet")
-        Files.copy(p, dst)
-        Files.setLastModifiedTime(dst, java.nio.file.attribute.FileTime.fromMillis(base + i * 60000L))
-      }
+      Scratch.list(stage).filter(_.toString.endsWith(".parquet"))
+        .foreach(p => Files.copy(p, in.resolve(f"file$i%03d.parquet")))
       Scratch.deleteTree(stage)
     }
+    pinMtimes(in.toString)(1000000000000L, Set.empty)
   }
 }

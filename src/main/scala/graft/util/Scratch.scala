@@ -1,6 +1,7 @@
 package graft.util
 
 import java.nio.file.{Files, Path}
+import scala.jdk.CollectionConverters._
 
 /**
  * Operator-owned scratch directories. Gates that stage data on local
@@ -23,6 +24,17 @@ object Scratch {
       .forEach(f => Files.deleteIfExists(f))
     finally walk.close()
   }
+
+  /** The entries directly under `dir`, in no particular order; missing
+    * path is empty. The listing is closed before returning: an open
+    * `Files.list` stream holds a file descriptor until it is closed. */
+  def list(dir: Path): Seq[Path] =
+    if (!Files.exists(dir)) Seq.empty
+    else {
+      val listing = Files.list(dir)
+      try listing.iterator().asScala.toVector
+      finally listing.close()
+    }
 
   // ONE shutdown hook draining a queue — a hook thread per tempDir
   // call would accumulate unboundedly when Bench/Verify re-run gates
